@@ -59,11 +59,7 @@ object Tables {
     spark
   }
 
-  /** Disable the build-once artifact caches (dedup signatures, IVF index):
-    * set GRAFT_NO_ARTIFACT_CACHE=1 to keep full lineage in every query —
-    * used by scripts/gen_plans.sh so PLANS.md shows the real pipelines
-    * instead of checkpoint scans.
-    */
+  /** GRAFT_NO_ARTIFACT_CACHE=1: the [[Artifacts]] registry's no-cache mode. */
   lazy val noArtifactCache: Boolean =
     sys.env.get("GRAFT_NO_ARTIFACT_CACHE").exists(_.nonEmpty)
 
@@ -253,6 +249,15 @@ object Tables {
     val mode = sp.conf.get("spark.graft.pin.mode", if (sc.isLocal) "local" else "persist")
     if (mode != "local" && sc.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
+  }
+
+  /** [[pin]] a tracked build's frame, then unpin the intermediates the
+    * builder pinned — they have no consumer once the frame is materialized.
+    */
+  def pinTracked(built: (DataFrame, Seq[DataFrame])): DataFrame = {
+    val pinned = pin(built._1)
+    built._2.foreach(unpin)
+    pinned
   }
 
   /** Chainable syntax for [[pin]]/[[pinIter]]:

@@ -176,11 +176,10 @@ object Bpe {
     (merges.result().reduce(_ unionByName _).orderBy(col("round")), mks.result())
   }
 
-  private val mergesCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val MergesArtifact = graft.Artifacts.declare("bpe_merges", graft.Artifacts.RangeSorted("round"))
 
   /** The trained merge table as a BUILD-ONCE artifact — the same treatment
-    * the graph family's PageRank scores get ([[graft.Artifacts.cachedIn]]):
+    * the graph family's PageRank scores get ([[graft.Artifacts]]):
     * session-pinned by default, durable range-sorted parquet (by round)
     * under `graft.artifact.root`, bit-identical replay pinned by
     * DurableArtifactParitySpec. A tokenizer is trained once and shipped;
@@ -193,14 +192,10 @@ object Bpe {
     // (r19 cold-budget trim); generation 0 is a pinIter copy of it, which
     // the loop reclaims without touching the shared frame
     def build = trainMergesWeightedTracked(Tables.pinIter(TextShared.seqFreq(s, dir)), Rounds)
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(build)
-    else
-      graft.Artifacts.cachedInTracked(mergesCache, s, dir, "bpe_merges", "round")(build)
+    graft.Artifacts.getTracked(s, dir, MergesArtifact)(build)
   }
 
-  private val mergesEvenCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val MergesEvenArtifact = graft.Artifacts.declare("bpe_merges_even", graft.Artifacts.RangeSorted("round"))
 
   /** The held-out gate's TRAINING-half merge table as its own build-once
     * artifact: the even-doc_id vocab is a pure function of the corpus
@@ -213,10 +208,7 @@ object Bpe {
     // the even-half collapse is the seq_freq_even artifact, SHARED with
     // the WordPiece and Unigram held-out trainers (r19 cold-budget trim)
     def build = trainMergesWeightedTracked(Tables.pinIter(TextShared.seqFreqEven(s, dir)), Rounds)
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(build)
-    else
-      graft.Artifacts.cachedInTracked(mergesEvenCache, s, dir, "bpe_merges_even", "round")(build)
+    graft.Artifacts.getTracked(s, dir, MergesEvenArtifact)(build)
   }
 
   /** Tokenizer APPLY — the other half of shipping a tokenizer: encode a
@@ -346,8 +338,7 @@ object Bpe {
       .orderBy(col("doc_id"))
       .limit(500)
 
-  private val encCorpusCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val EncCorpusArtifact = graft.Artifacts.declare("bpe_enc", graft.Artifacts.RangeSorted("s0"))
 
   /** The full-corpus frozen-vocab encode mapping (s0, enc) as a
     * build-once artifact — r20 optimization: FIVE gate queries consume
@@ -362,8 +353,7 @@ object Bpe {
       dir: String
   ): org.apache.spark.sql.DataFrame = {
     def build = encodeWithMerges(Tables.fanout(Tables.documents(s, dir)), trainedMerges(s, dir))
-    if (Tables.noArtifactCache) build
-    else graft.Artifacts.cachedIn(encCorpusCache, s, dir, "bpe_enc", "s0")(build)
+    graft.Artifacts.get(s, dir, EncCorpusArtifact)(build)
   }
 
   val defs: Seq[QueryDef] = Seq(

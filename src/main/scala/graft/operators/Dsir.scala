@@ -103,8 +103,7 @@ object Dsir {
       |    cast(cast(sum(lr.lr) as varchar) as double) AS logw
       |  FROM tb JOIN lr USING (b) GROUP BY tb.doc_id)""".stripMargin
 
-  private val docwCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val DocwArtifact = graft.Artifacts.declare("dsir_docw", graft.Artifacts.RangeSorted("doc_id"))
 
   /** [[docWeights]] as a build-once artifact — r20 optimization: both
     * DSIR gates (the weight census and the Gumbel top-k selection) re-ran
@@ -114,8 +113,7 @@ object Dsir {
     * cache.
     */
   private def docWeightsTable(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) docWeights(s, dir)
-    else graft.Artifacts.cachedIn(docwCache, s, dir, "dsir_docw", "doc_id")(docWeights(s, dir))
+    graft.Artifacts.get(s, dir, DocwArtifact)(docWeights(s, dir))
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef(

@@ -105,36 +105,13 @@ object Graph {
     * to pin its own copy, which re-ran the orders ⋈ lineitem distinct once
     * per query.
     */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val PairsArtifact = graft.Artifacts.declare("graph_purchase_pairs", graft.Artifacts.SessionOnly)
 
-  private[graft] def pinnedPairs(s: SparkSession, dir: String): DataFrame = {
-    pairsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val key = (s, dir)
-    Option(pairsCache.get(key)).getOrElse {
-      val built = Tables.pin(purchasePairs(s, dir))
-      Option(pairsCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
+  private[graft] def pinnedPairs(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.get(s, dir, PairsArtifact)(purchasePairs(s, dir))
 
-  /** Build-once artifact plumbing — the [[IvfSimilarity]] cachedIn shape,
-    * now shared in [[graft.Artifacts]]: session-scoped pin by default,
-    * durable range-sorted parquet under `graft.artifact.root` (root in the
-    * key: redirecting it rebuilds).
-    */
-  private def cachedIn(
-      cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
-      s: SparkSession,
-      dir: String,
-      name: String,
-      sortKey: String
-  )(build: => DataFrame): DataFrame =
-    graft.Artifacts.cachedIn(cache, s, dir, name, sortKey)(build)
-
-  private val edgesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val prCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val EdgesArtifact = graft.Artifacts.declare("graph_copurchase", graft.Artifacts.RangeSorted("pa"))
+  private val PrArtifact = graft.Artifacts.declare("graph_pagerank", graft.Artifacts.RangeSorted("node"))
 
   /** decimal-exact cross-row sum of a per-row double term (graph flavor:
     * scale 12, headroom to 10^15 terms).
@@ -156,8 +133,7 @@ object Graph {
     * durable artifact under `graft.artifact.root` (range-sorted on pa).
     */
   private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) buildCoPurchaseEdges(s, dir)
-    else cachedIn(edgesCache, s, dir, "graph_copurchase", "pa")(buildCoPurchaseEdges(s, dir))
+    graft.Artifacts.get(s, dir, EdgesArtifact)(buildCoPurchaseEdges(s, dir))
 
   /** Per-order basket cap for co-purchase pair generation. TPC-H orders
     * hold <= 7 lineitems, so 256 never binds on fixtures — but a real
@@ -753,19 +729,15 @@ object Graph {
     * spec/differential entry point.
     */
   private[graft] def pathCountsCensus(e: DataFrame, seedCount: Int = HarmonicSeeds): DataFrame =
-    graft.Artifacts.materializeTracked(pathCountsCensusTracked(e, seedCount))
+    Tables.pinTracked(pathCountsCensusTracked(e, seedCount))
 
-  private val pathcountsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val PathcountsArtifact = graft.Artifacts.declare("graph_pathcounts", graft.Artifacts.RangeSorted("node"))
 
   /** Path-multiplicity census as a build-once artifact — a readout over
     * the shared settled σ frame ([[sigmaFrame]]), not its own loop.
     */
   private def pathCountsArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) pathCountsCensus(coPurchaseEdges(s, dir))
-    else
-      graft.Artifacts.cachedInTracked(pathcountsCache, s, dir, "graph_pathcounts", "node")(
-        (pathCountsFrom(sigmaFrame(s, dir)), Seq.empty))
+    graft.Artifacts.get(s, dir, PathcountsArtifact)(pathCountsFrom(sigmaFrame(s, dir)))
 
   /** The harmonic readout over a settled (seed, node, d) frame. */
   private[graft] def harmonicFrom(dist: DataFrame): DataFrame =
@@ -820,25 +792,22 @@ object Graph {
     * settled-distance checkpoint per invocation).
     */
   private[graft] def harmonicCensus(e: DataFrame, seedCount: Int = HarmonicSeeds): DataFrame =
-    graft.Artifacts.materializeTracked(harmonicCensusTracked(e, seedCount))
+    Tables.pinTracked(harmonicCensusTracked(e, seedCount))
 
   /** [[effDiameterFrom]] over a fresh loop, materialized with its pins
     * reclaimed — the spec/differential entry point (same leak rationale
     * as [[harmonicCensus]]).
     */
   private[graft] def effDiameterCensus(e: DataFrame, seedCount: Int = HarmonicSeeds): DataFrame =
-    graft.Artifacts.materializeTracked {
+    Tables.pinTracked {
       val dist         = pathCounts(e, seedCount)
       val (f, histPin) = effDiameterFrom(dist)
       (f, histPin :+ dist)
     }
 
-  private val sigmaFrameCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val harmonicCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val effdiamCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val SigmaFrameArtifact = graft.Artifacts.declare("graph_sigma", graft.Artifacts.RangeSorted("seed"), prePinned = true)
+  private val HarmonicArtifact = graft.Artifacts.declare("graph_harmonic", graft.Artifacts.RangeSorted("node"))
+  private val EffdiamArtifact = graft.Artifacts.declare("graph_effdiam", graft.Artifacts.RangeSorted("d"))
 
   /** The settled multi-source (seed, node, d, sig) frame as its OWN
     * build-once artifact: harmonic centrality, the effective diameter,
@@ -849,23 +818,15 @@ object Graph {
     * graph_msbfs artifact (this frame is that one plus the σ column).
     */
   private def sigmaFrame(s: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.cachedPrePinned(sigmaFrameCache, s, dir, "graph_sigma", "seed")(
-      pathCounts(coPurchaseEdges(s, dir), HarmonicSeeds))
+    graft.Artifacts.get(s, dir, SigmaFrameArtifact)(pathCounts(coPurchaseEdges(s, dir), HarmonicSeeds))
 
   /** Harmonic-centrality table as a build-once artifact. */
   private def harmonicArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(harmonicCensusTracked(coPurchaseEdges(s, dir)))
-    else
-      graft.Artifacts.cachedInTracked(harmonicCache, s, dir, "graph_harmonic", "node")(
-        (harmonicFrom(sigmaFrame(s, dir)), Seq.empty))
+    graft.Artifacts.get(s, dir, HarmonicArtifact)(harmonicFrom(sigmaFrame(s, dir)))
 
   /** Effective-diameter census as a build-once artifact. */
   private def effDiameterArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) effDiameterCensus(coPurchaseEdges(s, dir))
-    else
-      graft.Artifacts.cachedInTracked(effdiamCache, s, dir, "graph_effdiam", "d")(
-        effDiameterFrom(sigmaFrame(s, dir)))
+    graft.Artifacts.getTracked(s, dir, EffdiamArtifact)(effDiameterFrom(sigmaFrame(s, dir)))
 
   /** Betweenness census size — top-K nodes by seed-sampled betweenness. */
   private[graft] val BetweennessTopK = 20
@@ -1028,22 +989,19 @@ object Graph {
 
   /** [[betweennessCensusTracked]] materialized with pins reclaimed. */
   private[graft] def betweennessCensus(e: DataFrame, seedCount: Int = HarmonicSeeds): DataFrame =
-    graft.Artifacts.materializeTracked(betweennessCensusTracked(e, seedCount))
+    Tables.pinTracked(betweennessCensusTracked(e, seedCount))
 
-  private val betweenCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val BetweenArtifact = graft.Artifacts.declare("graph_between", graft.Artifacts.RangeSorted("node"))
 
   /** Betweenness census as a build-once artifact — the backward pass
     * reads the SHARED settled σ frame ([[sigmaFrame]]), so a cold build
     * of the whole centrality family runs the forward loop exactly once.
     */
   private def betweennessArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) betweennessCensus(coPurchaseEdges(s, dir))
-    else
-      graft.Artifacts.cachedInTracked(betweenCache, s, dir, "graph_between", "node") {
-        val (delta, pins) = backwardDeltas(sigmaFrame(s, dir), coPurchaseEdges(s, dir))
-        (betweennessFrom(delta), pins)
-      }
+    graft.Artifacts.getTracked(s, dir, BetweenArtifact) {
+      val (delta, pins) = backwardDeltas(sigmaFrame(s, dir), coPurchaseEdges(s, dir))
+      (betweennessFrom(delta), pins)
+    }
 
   /** Synchronous label-propagation community census over an undirected
     * (pa < pb) edge set (Raghavan et al. 2007, made deterministic): labels
@@ -1340,20 +1298,15 @@ object Graph {
       Seq(deg, elL, elS) ++ sPins)
   }
 
-  private val modularityCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val ModularityArtifact = graft.Artifacts.declare("graph_community", graft.Artifacts.RangeSorted("lbl"))
 
   /** The shared per-community structure table as a build-once artifact
     * (graph_community) — both the modularity and conductance gates read
     * it.
     */
   private def communityArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(
-        communityStructureTracked(coPurchaseEdges(s, dir), mfgrSeeds(s, dir)))
-    else
-      graft.Artifacts.cachedInTracked(modularityCache, s, dir, "graph_community", "lbl")(
-        communityStructureTracked(coPurchaseEdges(s, dir), mfgrSeeds(s, dir)))
+    graft.Artifacts.getTracked(s, dir, ModularityArtifact)(
+      communityStructureTracked(coPurchaseEdges(s, dir), mfgrSeeds(s, dir)))
 
   /** The 2-row modularity gate, derived from the shared artifact. */
   private def modularityArtifact(s: SparkSession, dir: String): DataFrame =
@@ -1393,17 +1346,12 @@ object Graph {
       .filter(col("p_partkey") % 4 === 0)
       .select(col("p_partkey").as("node"), substring(col("p_brand"), 7, 2).cast("long").as("lbl"))
 
-  private val seededCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val SeededArtifact = graft.Artifacts.declare("graph_seeded", graft.Artifacts.RangeSorted("lbl"))
 
   /** Seeded-label census as a build-once artifact. */
   private def seededLabelsArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(
-        seededLabelsCensusTracked(coPurchaseEdges(s, dir), mfgrSeeds(s, dir)))
-    else
-      graft.Artifacts.cachedInTracked(seededCache, s, dir, "graph_seeded", "lbl")(
-        seededLabelsCensusTracked(coPurchaseEdges(s, dir), mfgrSeeds(s, dir)))
+    graft.Artifacts.getTracked(s, dir, SeededArtifact)(
+      seededLabelsCensusTracked(coPurchaseEdges(s, dir), mfgrSeeds(s, dir)))
 
   /** The k-truss gate query's peel-depth bound — the [[KcoreOracleRounds]]
     * discipline: Spark convergence REQUIRED within it, oracle unrolls
@@ -1729,16 +1677,11 @@ object Graph {
   private[graft] def walkFrame(e: DataFrame): DataFrame =
     walkCorpus(e, hops = 3, walks = 1).select(col("start"), col("n1"), col("n2"), col("n3"))
 
-  private val walks1Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val walks2Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val triCountsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val bfsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val aaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val Walks1Artifact = graft.Artifacts.declare("graph_walks1", graft.Artifacts.RangeSorted("start"))
+  private val Walks2Artifact = graft.Artifacts.declare("graph_walks2", graft.Artifacts.RangeSorted("start"))
+  private val TriCountsArtifact = graft.Artifacts.declare("graph_tricounts", graft.Artifacts.RangeSorted("node"))
+  private val BfsArtifact = graft.Artifacts.declare("graph_bfs", graft.Artifacts.RangeSorted("d"))
+  private val AaArtifact = graft.Artifacts.declare("graph_aa", graft.Artifacts.RangeSorted("part_a"))
 
   /** The deterministic 1x3 walk corpus as a build-once artifact (r21):
     * the walk gate AND the skip-gram pair census each re-ran the 3 hop
@@ -1748,20 +1691,15 @@ object Graph {
     * training.
     */
   private def walks1Artifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) walkFrame(coPurchaseEdges(s, dir))
-    else
-      graft.Artifacts.cachedInTracked(walks1Cache, s, dir, "graph_walks1", "start") {
-        val (wf, pins) = walkCorpusTracked(coPurchaseEdges(s, dir), hops = 3, walks = 1)
-        (wf.select(col("start"), col("n1"), col("n2"), col("n3")), pins)
-      }
+    graft.Artifacts.getTracked(s, dir, Walks1Artifact) {
+      val (wf, pins) = walkCorpusTracked(coPurchaseEdges(s, dir), hops = 3, walks = 1)
+      (wf.select(col("start"), col("n1"), col("n2"), col("n3")), pins)
+    }
 
   /** The W=2 x L=4 walk corpus as a build-once artifact (same rationale). */
   private def walks2Artifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      walkCorpus(coPurchaseEdges(s, dir), hops = 4, walks = 2)
-    else
-      graft.Artifacts.cachedInTracked(walks2Cache, s, dir, "graph_walks2", "start")(
-        walkCorpusTracked(coPurchaseEdges(s, dir), hops = 4, walks = 2))
+    graft.Artifacts.getTracked(s, dir, Walks2Artifact)(
+      walkCorpusTracked(coPurchaseEdges(s, dir), hops = 4, walks = 2))
 
   /** Per-node triangle counts as a build-once artifact (r21): the
     * triangle census and the clustering decile census each re-ran the
@@ -1769,10 +1707,7 @@ object Graph {
     * (node, t) frame (sum(t) is exactly 3x the global triangle count).
     */
   private def triCountsArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) triNodeCountsTracked(coPurchaseEdges(s, dir))._1
-    else
-      graft.Artifacts.cachedInTracked(triCountsCache, s, dir, "graph_tricounts", "node")(
-        triNodeCountsTracked(coPurchaseEdges(s, dir)))
+    graft.Artifacts.getTracked(s, dir, TriCountsArtifact)(triNodeCountsTracked(coPurchaseEdges(s, dir)))
 
   /** The BFS hop-distance census as a build-once artifact (r21): the gate
     * re-ran the full synchronized frontier loop per call; a converged
@@ -1780,20 +1715,14 @@ object Graph {
     * the components census.
     */
   private def bfsArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) bfsCensus(coPurchaseEdges(s, dir))
-    else
-      graft.Artifacts.cachedInTracked(bfsCache, s, dir, "graph_bfs", "d")(
-        bfsCensusTracked(coPurchaseEdges(s, dir)))
+    graft.Artifacts.getTracked(s, dir, BfsArtifact)(bfsCensusTracked(coPurchaseEdges(s, dir)))
 
   /** The Adamic-Adar link-prediction score table as a build-once artifact
     * (r21) — the same class as the PageRank/TrustRank priors: a trained
     * recommendation table over a stable edge frame.
     */
   private def aaArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) adamicAdarScores(coPurchaseEdges(s, dir))
-    else
-      graft.Artifacts.cachedInTracked(aaCache, s, dir, "graph_aa", "part_a")(
-        adamicAdarScoresTracked(coPurchaseEdges(s, dir)))
+    graft.Artifacts.getTracked(s, dir, AaArtifact)(adamicAdarScoresTracked(coPurchaseEdges(s, dir)))
 
   /** DuckDB twin of [[walkCorpus]], CTE chain ending in
     * `w<hops>(start, walk, n1..n<hops>)` — assumes `e(pa, pb)` is already
@@ -1956,44 +1885,32 @@ object Graph {
     (scores, Seq(sat, edges, nodes))
   }
 
-  private val wewCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val WewArtifact = graft.Artifacts.declare("graph_wew", graft.Artifacts.RangeSorted("pa"))
 
   /** The WEIGHTED co-purchase edge list (pa, pb, w) as its own build-once
     * artifact — the `graph_copurchase` treatment: both weighted consumers
     * (weighted PageRank, SSSP) derive from ONE materialization instead of
     * each re-running the capped basket explode, and — load-bearing for
     * observability — the `graft.copurchase_pairs` cap metric fires inside
-    * THIS artifact's captured write (the cachedIn metrics window), so a
+    * THIS artifact's captured write (the registry's metrics window), so a
     * capped build persists its `_metrics.json` in durable mode instead of
     * the observe being swallowed by a pin inside a downstream builder.
     */
   private[graft] def coPurchaseEdgesWeighted(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) coPurchaseEdgesWeightedFrom(orderParts(s, dir))
-    else cachedIn(wewCache, s, dir, "graph_wew", "pa")(
-      coPurchaseEdgesWeightedFrom(orderParts(s, dir)))
+    graft.Artifacts.get(s, dir, WewArtifact)(coPurchaseEdgesWeightedFrom(orderParts(s, dir)))
 
-  private val wprCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val WprArtifact = graft.Artifacts.declare("graph_wpr", graft.Artifacts.RangeSorted("node"))
 
   /** Weighted-PageRank scores as a build-once artifact (the PPR/PageRank
     * treatment): a weighted quality prior is reused across runs. Builds
     * from the shared [[coPurchaseEdgesWeighted]] artifact.
     */
   private def weightedPagerankScores(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      // full-rebuild mode still reclaims the builder's pins: materialize
-      // the scores once, unpin the tracked intermediates (the
-      // cachedInTracked session path, applied outside the cache)
-      graft.Artifacts.materializeTracked(
-        buildWeightedPagerankScoresTracked(coPurchaseEdgesWeighted(s, dir)))
-    else
-      graft.Artifacts.cachedInTracked(wprCache, s, dir, "graph_wpr", "node")(
-        buildWeightedPagerankScoresTracked(coPurchaseEdgesWeighted(s, dir))
-      )
+    graft.Artifacts.getTracked(s, dir, WprArtifact)(
+      buildWeightedPagerankScoresTracked(coPurchaseEdgesWeighted(s, dir))
+    )
 
-  private val ssspCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val SsspArtifact = graft.Artifacts.declare("graph_sssp", graft.Artifacts.RangeSorted("node"), prePinned = true)
 
   /** The settled SSSP distance table as a build-once artifact: a
     * trust-distance field from a fixed seed is reused across runs exactly
@@ -2003,11 +1920,7 @@ object Graph {
     * it as-is instead of re-materializing a copy.
     */
   private def ssspDistances(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      ssspFrom(coPurchaseEdgesWeighted(s, dir))
-    else
-      graft.Artifacts.cachedPrePinned(ssspCache, s, dir, "graph_sssp", "node")(
-        ssspFrom(coPurchaseEdgesWeighted(s, dir)))
+    graft.Artifacts.get(s, dir, SsspArtifact)(ssspFrom(coPurchaseEdgesWeighted(s, dir)))
 
   /** The PageRank score table as a build-once artifact: session-pinned by
     * default, durable range-sorted parquet (by node) under
@@ -2015,27 +1928,19 @@ object Graph {
     * joins against on every run.
     */
   private def pagerankScores(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(buildPagerankScoresTracked(pinnedPairs(s, dir)))
-    else graft.Artifacts.cachedInTracked(prCache, s, dir, "graph_pagerank", "node")(
-      buildPagerankScoresTracked(pinnedPairs(s, dir)))
+    graft.Artifacts.getTracked(s, dir, PrArtifact)(buildPagerankScoresTracked(pinnedPairs(s, dir)))
 
-  private val trCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val TrArtifact = graft.Artifacts.declare("graph_trustrank", graft.Artifacts.RangeSorted("node"))
 
   /** TrustRank score table — the same build-once artifact treatment as the
     * PageRank scores (a whitelist-trust prior is reused across runs just
     * like the quality prior).
     */
   private def trustrankScores(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(
-        buildTrustrankScoresTracked(pinnedPairs(s, dir), trustSeeds(s, dir)))
-    else graft.Artifacts.cachedInTracked(trCache, s, dir, "graph_trustrank", "node")(
+    graft.Artifacts.getTracked(s, dir, TrArtifact)(
       buildTrustrankScoresTracked(pinnedPairs(s, dir), trustSeeds(s, dir)))
 
-  private val pprCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val PprArtifact = graft.Artifacts.declare("graph_ppr", graft.Artifacts.RangeSorted("node"))
 
   /** The personalized-PageRank query node: the MIN supplier id — a
     * deterministic single-entity seed (any entity id works; the gate pins
@@ -2050,33 +1955,24 @@ object Graph {
     * treatment.
     */
   private def pprScores(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(
-        buildTrustrankScoresTracked(pinnedPairs(s, dir), pprSeed(s, dir)))
-    else
-      graft.Artifacts.cachedInTracked(pprCache, s, dir, "graph_ppr", "node")(
-        buildTrustrankScoresTracked(pinnedPairs(s, dir), pprSeed(s, dir)))
+    graft.Artifacts.getTracked(s, dir, PprArtifact)(
+      buildTrustrankScoresTracked(pinnedPairs(s, dir), pprSeed(s, dir)))
 
   // ── build-once CENSUS artifacts ──────────────────────────────────────
   // The iterative census queries (connected components, k-core, k-truss,
   // HITS, LPA) converge over the same stable edge frames as the centrality
   // priors — build-once results by the same standard, so they ride the
-  // same cachedIn + graft.artifact.root discipline: a warm session (or a
+  // same registry + graft.artifact.root discipline: a warm session (or a
   // durable deployment) answers them at artifact-read cost instead of
   // re-running the fixpoint/peel every time. Each build is TRACKED — the
   // loop's pinned census rows are reclaimed once the artifact
   // materializes.
 
-  private val componentsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val kcoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val trussCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val hitsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val lpaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val ComponentsArtifact = graft.Artifacts.declare("graph_components", graft.Artifacts.RangeSorted("round"))
+  private val KcoreArtifact = graft.Artifacts.declare("graph_kcore", graft.Artifacts.RangeSorted("k"))
+  private val TrussArtifact = graft.Artifacts.declare("graph_truss", graft.Artifacts.RangeSorted("k"))
+  private val HitsArtifact = graft.Artifacts.declare("graph_hits", graft.Artifacts.RangeSorted("suppkey"))
+  private val LpaArtifact = graft.Artifacts.declare("graph_lpa", graft.Artifacts.RangeSorted("round"))
 
   /** The connected-components census over a (c, s) purchase-pair frame:
     * 4 synchronous min-label propagation rounds (round, n_labels, min_lbl)
@@ -2181,11 +2077,7 @@ object Graph {
 
   /** Connected-components census as a build-once artifact. */
   private def componentsCensus(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(buildComponentsCensusTracked(pinnedPairs(s, dir)))
-    else
-      graft.Artifacts.cachedInTracked(componentsCache, s, dir, "graph_components", "round")(
-        buildComponentsCensusTracked(pinnedPairs(s, dir)))
+    graft.Artifacts.getTracked(s, dir, ComponentsArtifact)(buildComponentsCensusTracked(pinnedPairs(s, dir)))
 
   /** k-core peel census (k = 2 and 3) as a build-once artifact. */
   private def kcoreCensusArtifact(s: SparkSession, dir: String): DataFrame = {
@@ -2195,8 +2087,7 @@ object Graph {
       val (c3, p3) = kcoreCensusTracked(e, 3, maxRounds = KcoreOracleRounds)
       (c2.unionByName(c3), p2 ++ p3)
     }
-    if (Tables.noArtifactCache) graft.Artifacts.materializeTracked(build)
-    else graft.Artifacts.cachedInTracked(kcoreCache, s, dir, "graph_kcore", "k")(build)
+    graft.Artifacts.getTracked(s, dir, KcoreArtifact)(build)
   }
 
   /** k-truss peel census (k = 3 and 4) as a build-once artifact. */
@@ -2207,25 +2098,16 @@ object Graph {
       val (c4, p4) = trussCensusTracked(e, 4, maxRounds = TrussOracleRounds)
       (c3.unionByName(c4), p3 ++ p4)
     }
-    if (Tables.noArtifactCache) graft.Artifacts.materializeTracked(build)
-    else graft.Artifacts.cachedInTracked(trussCache, s, dir, "graph_truss", "k")(build)
+    graft.Artifacts.getTracked(s, dir, TrussArtifact)(build)
   }
 
   /** HITS authority table as a build-once artifact. */
   private def hitsAuthority(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(buildHitsAuthorityTracked(pinnedPairs(s, dir)))
-    else
-      graft.Artifacts.cachedInTracked(hitsCache, s, dir, "graph_hits", "suppkey")(
-        buildHitsAuthorityTracked(pinnedPairs(s, dir)))
+    graft.Artifacts.getTracked(s, dir, HitsArtifact)(buildHitsAuthorityTracked(pinnedPairs(s, dir)))
 
   /** LPA community census as a build-once artifact. */
   private def lpaCensusArtifact(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(lpaCensusTracked(coPurchaseEdges(s, dir)))
-    else
-      graft.Artifacts.cachedInTracked(lpaCache, s, dir, "graph_lpa", "round")(
-        lpaCensusTracked(coPurchaseEdges(s, dir)))
+    graft.Artifacts.getTracked(s, dir, LpaArtifact)(lpaCensusTracked(coPurchaseEdges(s, dir)))
 
   /** The fixture-derived trusted seed whitelist: suppliers whose nation
     * sits in region EUROPE, as long node ids. Shared by the batch query

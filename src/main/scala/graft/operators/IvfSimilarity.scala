@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
-import graft.Tables.PinOps
+import graft.{Artifacts, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,30 +41,20 @@ object IvfSimilarity {
     * in every Lloyd pass (cent1, both assigns, cent2) and the probe twice
     * more — an unbroken lineage re-runs the scan+explode 4-6x per query.
     * Same per-round lineage-cut discipline as [[Dedup.clusters]].
+    *
+    * An intermediate, not an index artifact: always session-scoped, never
+    * persisted durably. Pinned PRE-PARTITIONED on vec_id (r21,
+    * Tables.pinKeyed): every Lloyd pass and every probe aggregates this
+    * frame by vec_id behind a broadcast centroid/member join, so the
+    * per-call Exchange moves into the one-time pin and the distance math
+    * spreads across the pinned partitions instead of AQE coalescing it
+    * onto one task.
     */
-  private val compCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val CompArtifact =
+    Artifacts.declare("ivf_comp", Artifacts.SessionOnly, pinKeys = Seq("vec_id"))
 
   private def comp(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) buildComp(s, dir)
-    // comp is an intermediate (the exploded component view), not an index
-    // artifact — always session-scoped, never persisted durably. Pinned
-    // PRE-PARTITIONED on vec_id (r21, Tables.pinKeyed): every Lloyd pass
-    // and every probe aggregates this frame by vec_id behind a broadcast
-    // centroid/member join, so the per-call Exchange moves into the
-    // one-time pin and the distance math spreads across the pinned
-    // partitions instead of AQE coalescing it onto one task.
-    else {
-      val key = (s, s"$dir|")
-      compCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      Option(compCache.get(key)).getOrElse {
-        val built = Tables.pinKeyed(buildComp(s, dir), col("vec_id"))
-        Option(compCache.putIfAbsent(key, built)).getOrElse(built)
-      }
-    }
-
-  private def buildComp(s: SparkSession, dir: String): DataFrame =
-    compFrame(Tables.fanout(Tables.embeddings(s, dir)))
+    Artifacts.get(s, dir, CompArtifact)(compFrame(Tables.fanout(Tables.embeddings(s, dir))))
 
   /** Frame-generic exploded component view — the shape every k-means /
     * probe stage consumes. Exposed to [[graft.streaming.StreamingIvf]],
@@ -86,9 +75,13 @@ object IvfSimilarity {
     * column compare (exact decimals, ties to the smallest cid — identical
     * to the oracle's ORDER BY dist, cid), so no per-vec window sort either.
     * Same math, same oracle SQL.
+    *
+    * Durable layout = the actual INVERTED FILE: hive-partitioned by cid, so
+    * a probe that filters to the query's cluster reads ~1/K of the index
+    * via partition pruning, sorted by vec_id for row-group pruning.
     */
-  private val assignCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val AssignArtifact =
+    Artifacts.declare("ivf_assignments", Artifacts.Partitioned(Seq("cid"), Seq("vec_id")))
 
   /** The built index, one per (session, sfDir) — an IVF index is built once
     * and probed many times, so the probe reuses the build's assignments
@@ -96,68 +89,19 @@ object IvfSimilarity {
     * both queries against independent DuckDB derivations).
     */
   private[graft] def assignments(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) buildAssignments(s, dir)
-    // durable layout = the actual INVERTED FILE: hive-partitioned by cid,
-    // so a probe that filters to the query's cluster reads ~1/K of the
-    // index via partition pruning, sorted by vec_id for row-group pruning
-    else cachedIn(assignCache, s, dir, "ivf_assignments",
-      Some((df, p) => graft.sources.Sinks.writePartitioned(df, p, Seq("cid"), Seq("vec_id")))
-    )(buildAssignments(s, dir))
-
-  /** Build-outside-the-map caching: computeIfAbsent would throw "Recursive
-    * update" if a cached artifact ever builds on another in the same map,
-    * and the assignments build DOES call comp() — keep both maps on the
-    * same safe pattern.
-    *
-    * SCOPE: with `Tables.artifactRoot` unset (the bench default) this is
-    * bench/verify-harness caching over a bounded key set — no eviction,
-    * and `localCheckpoint` blocks are non-reliable, so executor loss fails
-    * later reuses rather than recomputing. With a root set and a
-    * `durableWrite` layout supplied, the build-once artifact instead goes
-    * through [[graft.sources.Sinks.durableArtifact]] to durable storage —
-    * surviving restarts, probe-from-another-job, executor loss. The root
-    * is part of the cache key so redirecting it mid-session rebuilds.
-    * `Tables.noArtifactCache` opts out for full-lineage runs.
-    */
-  private def cachedIn(
-      cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
-      s: SparkSession,
-      dir: String,
-      name: String,
-      durableWrite: Option[(DataFrame, String) => Unit]
-  )(build: => DataFrame): DataFrame = {
-    val root = durableWrite.flatMap(_ => Tables.artifactRoot)
-    val key  = (s, s"$dir|${root.getOrElse("")}")
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped) // same eviction rule as Tables.read
-    Option(cache.get(key)).getOrElse {
-      val built = root match {
-        case Some(r) =>
-          val path = graft.Artifacts.durablePath(r, dir, name)
-          graft.sources.Sinks.durableArtifact(s, path)(p => durableWrite.get(build, p))
-        case None => build.pin()
-      }
-      Option(cache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
+    Artifacts.get(s, dir, AssignArtifact)(assignPass(comp(s, dir), cent2(s, dir)))
 
   /** Second-iteration centroids (wide), cached as their own artifact: the
     * final assignment pass AND the multi-probe query both need them (the
     * probe ranks the query vector against the trained centroids — deriving
     * them from the FINAL assignments would be wrong, cent2 comes from the
-    * first-pass labels a1).
+    * first-pass labels a1). K x dims values: one range-sorted file is the
+    * whole artifact.
     */
-  private val cent2Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val Cent2Artifact = Artifacts.declare("ivf_cent2", Artifacts.RangeSorted("d", 1))
 
   private def cent2(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) buildCent2(s, dir)
-    // K x dims values: one range-sorted file is the whole artifact
-    else cachedIn(cent2Cache, s, dir, "ivf_cent2",
-      Some((df, p) => graft.sources.Sinks.writeRangeSorted(df, p, "d", 1))
-    )(buildCent2(s, dir))
-
-  private def buildCent2(s: SparkSession, dir: String): DataFrame =
-    trainCentroids(comp(s, dir))
+    Artifacts.get(s, dir, Cent2Artifact)(trainCentroids(comp(s, dir)))
 
   /** Frame-generic centroid training (2 Lloyd iterations over an exploded
     * component frame, first-K init on the smallest vec_ids). Deterministic
@@ -217,9 +161,6 @@ object IvfSimilarity {
       sums.select(col("vec_id"), argmin.as("cid"), minDist.as("dist"))
   }
 
-  private def buildAssignments(s: SparkSession, dir: String): DataFrame =
-    assignPass(comp(s, dir), cent2(s, dir))
-
   /** Product quantization (Jégou et al. 2011, the Faiss PQ primitive): the
     * embedding splits into [[PqM]] contiguous 16-dim subspaces, each with
     * its OWN deterministic [[K]]-centroid codebook — [[trainCentroids]] /
@@ -239,22 +180,14 @@ object IvfSimilarity {
     c.filter(floor((col("d") - 1) / 16).cast("int") === m)
       .select(col("vec_id"), (col("d") - lit(16 * m)).as("d"), col("x"))
 
-  private val pqCentCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val pqCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val PqCentArtifact  = Artifacts.declare("pq_cent", Artifacts.RangeSorted("sub", 1))
+  private val PqCodesArtifact = Artifacts.declare("pq_codes", Artifacts.RangeSorted("vec_id"))
 
   /** Long-form codebooks (sub, dl, cid, cx) — one frame for all M
     * subspaces; the probe's distance table reads it directly.
     */
   private def pqCent(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) buildPqCent(s, dir)
-    else cachedIn(pqCentCache, s, dir, "pq_cent",
-      Some((df, p) => graft.sources.Sinks.writeRangeSorted(df, p, "sub", 1))
-    )(buildPqCent(s, dir))
-
-  private def buildPqCent(s: SparkSession, dir: String): DataFrame =
-    pqCentFrom(comp(s, dir))
+    Artifacts.get(s, dir, PqCentArtifact)(pqCentFrom(comp(s, dir)))
 
   /** Frame-generic long-form PQ codebooks (sub, dl, cid, cx) from any
     * exploded component frame — deterministic in the row SET like
@@ -280,13 +213,7 @@ object IvfSimilarity {
     * layout range-sorts on vec_id — the probe streams it map-only.
     */
   private def pqCodes(s: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) buildPqCodes(s, dir)
-    else cachedIn(pqCodesCache, s, dir, "pq_codes",
-      Some((df, p) => graft.sources.Sinks.writeRangeSorted(df, p, "vec_id", 4))
-    )(buildPqCodes(s, dir))
-
-  private def buildPqCodes(s: SparkSession, dir: String): DataFrame =
-    pqCodesFrom(comp(s, dir), pqCent(s, dir))
+    Artifacts.get(s, dir, PqCodesArtifact)(pqCodesFrom(comp(s, dir), pqCent(s, dir)))
 
   /** Frame-generic PQ encoding (vec_id, sub, cid, dist) of a component
     * frame against long-form codebooks.
@@ -432,8 +359,7 @@ object IvfSimilarity {
     (census, Seq(labels))
   }
 
-  private val semCcCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val SemCcArtifact = Artifacts.declare("semantic_cc", Artifacts.RangeSorted("cid"))
 
   /** The per-cluster group census as a build-once artifact (semantic_cc)
     * — the census-artifact treatment every deterministic readout gets
@@ -442,8 +368,7 @@ object IvfSimilarity {
   private def semanticCcArtifact(s: SparkSession, dir: String): DataFrame = {
     def build =
       semanticCcStatsTracked(Tables.fanout(Tables.embeddings(s, dir)), assignments(s, dir), 0.2)
-    if (Tables.noArtifactCache) graft.Artifacts.materializeTracked(build)
-    else graft.Artifacts.cachedInTracked(semCcCache, s, dir, "semantic_cc", "cid")(build)
+    Artifacts.getTracked(s, dir, SemCcArtifact)(build)
   }
 
   // ---- DuckDB twins (same structure, CTE chain) ----
@@ -518,6 +443,13 @@ object IvfSimilarity {
        |    SELECT vec_id, sub, cid, dist,
        |      row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rn
        |    FROM pdist2) t WHERE rn = 1)""".stripMargin
+
+  /** Per-query session-only stats frames, built once per fixture: the
+    * (label x cid) census of `q_drift_semantic` and the global cosine
+    * scoring pass of `q_sim_ivf_recall`.
+    */
+  private val DriftCensus  = Artifacts.declare("drift_semantic_census", Artifacts.SessionOnly)
+  private val RecallScored = Artifacts.declare("ivf_recall_scored", Artifacts.SessionOnly)
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
@@ -737,12 +669,14 @@ object IvfSimilarity {
       "q_drift_semantic",
       s"EMBEDDING-SPACE drift monitor: per-label PSI over the IVF cluster-occupancy distribution vs the whole corpus — the semantic companion of q_drift_psi (length drift can be flat while a label quietly occupies different regions of embedding space; cluster ids are the buckets, so the check reuses the build-once IVF artifact instead of touching raw vectors). Same Laplace-smoothed, decimal-term PSI construction; the embeddings table never joins anything bigger than the $K-row cluster census",
       (s, dir) => {
-        val a = assignments(s, dir).select(col("vec_id"), col("cid"))
-        val b = Tables.embeddings(s, dir).select(col("vec_id"), col("label")).join(a, "vec_id")
         // one pass over the joined frame; everything else re-aggregates
         // the tiny (label x cid) census (reference-once rule, as in
         // q_drift_psi — PlanSpec pins the single embeddings scan)
-        val sb  = b.groupBy(col("label"), col("cid")).agg(count(lit(1)).as("n_sb")).pin()
+        val sb = Artifacts.get(s, dir, DriftCensus) {
+          val a = assignments(s, dir).select(col("vec_id"), col("cid"))
+          Tables.embeddings(s, dir).select(col("vec_id"), col("label")).join(a, "vec_id")
+            .groupBy(col("label"), col("cid")).agg(count(lit(1)).as("n_sb"))
+        }
         val st  = sb.groupBy(col("label")).agg(sum(col("n_sb")).as("n_s"))
         val cb  = sb.groupBy(col("cid")).agg(sum(col("n_sb")).as("n_b"))
         val tot = sb.agg(sum(col("n_sb")).as("n"))
@@ -885,7 +819,7 @@ object IvfSimilarity {
         // frame restricted to the cluster members — exactly the oracle's
         // `sall JOIN members` shape — instead of a second comp-join
         // aggregation over the members
-        val scoredAll = graft.Tables.pin(scoredOf())
+        val scoredAll = Artifacts.get(s, dir, RecallScored)(scoredOf())
         val brute     = scoredAll.orderBy(col("cos_sim").desc, col("vec_id")).limit(10).select("vec_id")
         val probe =
           scoredAll.join(members, "vec_id").orderBy(col("cos_sim").desc, col("vec_id")).limit(10).select("vec_id")

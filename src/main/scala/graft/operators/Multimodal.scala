@@ -262,10 +262,8 @@ object Multimodal {
       |    string_agg(CASE WHEN bs * n > ts * bc THEN '1' ELSE '0' END, '' ORDER BY b) AS ahash
       |  FROM blk JOIN tot USING (doc_id) GROUP BY doc_id)""".stripMargin
 
-  private val ahashCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-  private val audioFpCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val AhashArtifact   = graft.Artifacts.declare("ahash_fp", graft.Artifacts.RangeSorted("doc_id"))
+  private val AudioFpArtifact = graft.Artifacts.declare("audio_fp", graft.Artifacts.RangeSorted("doc_id"))
 
   /** The fixture corpus's aHash fingerprint table as a BUILD-ONCE
     * artifact (the [[graft.operators.Bpe.trainedMerges]] treatment): the
@@ -279,13 +277,9 @@ object Multimodal {
     * keeps an always-hot pixel-sum decode in the gate besides.
     */
   private[graft] def ahashTable(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) ahashFrame(pngTable(s, dir))
-    else
-      graft.Artifacts.cachedIn(ahashCache, s, dir, "ahash_fp", "doc_id")(
-        ahashFrame(pngTable(s, dir)))
+    graft.Artifacts.get(s, dir, AhashArtifact)(ahashFrame(pngTable(s, dir)))
 
-  private val ahashClustersCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val AhashClustersArtifact = graft.Artifacts.declare("ahash_clusters", graft.Artifacts.RangeSorted("label"))
 
   /** The image duplicate-cluster CENSUS as a build-once artifact (the
     * graph-census treatment — `q_graph_components` precedent: a converged
@@ -308,18 +302,14 @@ object Multimodal {
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_fingerprints"), sum(col("n_docs")).cast("long").as("n_images"))
     }
-    if (Tables.noArtifactCache) build
-    else graft.Artifacts.cachedIn(ahashClustersCache, s, dir, "ahash_clusters", "label")(build)
+    graft.Artifacts.get(s, dir, AhashClustersArtifact)(build)
   }
 
   /** The audio-fingerprint twin of [[ahashTable]] (AudioSystem PCM decode
     * + segment-energy census, build-once).
     */
   private[graft] def audioFpTable(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) audioFingerprintFrame(wavTable(s, dir))
-    else
-      graft.Artifacts.cachedIn(audioFpCache, s, dir, "audio_fp", "doc_id")(
-        audioFingerprintFrame(wavTable(s, dir)))
+    graft.Artifacts.get(s, dir, AudioFpArtifact)(audioFingerprintFrame(wavTable(s, dir)))
 
   /** Banded near-dup FINGERPRINT pairs over [[ahashFrame]] output — the
     * [[graft.operators.Dedup.simhashBandPairs]] shape applied to image
@@ -366,12 +356,9 @@ object Multimodal {
       .orderBy(col("ah_a"), col("ah_b"))
   }
 
-  private val pngTableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val jpegTableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val wavTableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val PngTableArtifact  = graft.Artifacts.declare("png_media", graft.Artifacts.RangeSorted("doc_id"))
+  private val JpegTableArtifact = graft.Artifacts.declare("jpeg_media", graft.Artifacts.RangeSorted("doc_id"))
+  private val WavTableArtifact  = graft.Artifacts.declare("wav_media", graft.Artifacts.RangeSorted("doc_id"))
 
   /** The synthesized media FIXTURE tables are build-once artifacts — r20
     * optimization: every consumer (decode gate, header gates, fingerprint
@@ -380,15 +367,12 @@ object Multimodal {
     * encode is corpus synthesis — the stand-in for reading real media
     * files — not the decode/parse work the gates prove. The payload
     * bytes are a pure function of `documents`, so they follow the same
-    * cachedIn discipline as the fingerprint tables derived from them;
+    * build-once discipline as the fingerprint tables derived from them;
     * the gated work (ImageIO decode, header walks, PCM census) still
     * executes per query over the materialized payloads.
     */
   def pngTable(spark: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) pngTableBody(spark, dir)
-    else
-      graft.Artifacts.cachedIn(pngTableCache, spark, dir, "png_media", "doc_id")(
-        pngTableBody(spark, dir))
+    graft.Artifacts.get(spark, dir, PngTableArtifact)(pngTableBody(spark, dir))
 
   private def pngTableBody(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -427,10 +411,7 @@ object Multimodal {
     * exactly the 100 TB header-scan path.
     */
   def jpegTable(spark: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) jpegTableBody(spark, dir)
-    else
-      graft.Artifacts.cachedIn(jpegTableCache, spark, dir, "jpeg_media", "doc_id")(
-        jpegTableBody(spark, dir))
+    graft.Artifacts.get(spark, dir, JpegTableArtifact)(jpegTableBody(spark, dir))
 
   private def jpegTableBody(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -511,10 +492,7 @@ object Multimodal {
     * the closed-form formulas.
     */
   def wavTable(spark: SparkSession, dir: String): DataFrame =
-    if (Tables.noArtifactCache) wavTableBody(spark, dir)
-    else
-      graft.Artifacts.cachedIn(wavTableCache, spark, dir, "wav_media", "doc_id")(
-        wavTableBody(spark, dir))
+    graft.Artifacts.get(spark, dir, WavTableArtifact)(wavTableBody(spark, dir))
 
   private def wavTableBody(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -258,8 +258,7 @@ object NaiveBayes {
           .as("kappa"))
   }
 
-  private val confCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val ConfArtifact = graft.Artifacts.declare("nb_scored", graft.Artifacts.RangeSorted("lang"))
 
   /** The held-out scored census as a BUILD-ONCE artifact (nb_scored —
     * replaces r18's nb_confusion, which lacked the margin axis): the
@@ -273,20 +272,14 @@ object NaiveBayes {
       s: org.apache.spark.sql.SparkSession,
       dir: String
   ): DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(
-        (scoredCensus(Tables.fanout(Tables.documents(s, dir))), Seq.empty))
-    else
-      graft.Artifacts.cachedInTracked(confCache, s, dir, "nb_scored", "lang")(
-        (scoredCensus(Tables.fanout(Tables.documents(s, dir))), Seq.empty))
+    graft.Artifacts.get(s, dir, ConfArtifact)(scoredCensus(Tables.fanout(Tables.documents(s, dir))))
 
   private def confusionArtifact(
       s: org.apache.spark.sql.SparkSession,
       dir: String
   ): DataFrame = confusionFromScored(scoredArtifact(s, dir))
 
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val ModelArtifact = graft.Artifacts.declare("nb_model", graft.Artifacts.RangeSorted("tok"))
 
   /** The trained even-half NB score table (lang, tok, c, s) as a
     * build-once artifact (r21): `q_nb_train` re-ran the full training —
@@ -306,8 +299,7 @@ object NaiveBayes {
         .fanout(Tables.documents(s, dir))
         .filter(col("doc_id") % 2 === 0)
         .select(col("lang"), col("text").as("s"), lit(1L).as("w")))._1
-    if (Tables.noArtifactCache) build
-    else graft.Artifacts.cachedIn(modelCache, s, dir, "nb_model", "tok")(build)
+    graft.Artifacts.get(s, dir, ModelArtifact)(build)
   }
 
   // ── oracle SQL ─────────────────────────────────────────────────────────

@@ -333,8 +333,7 @@ object PackSequences {
         row_number().over(org.apache.spark.sql.expressions.Window.orderBy(col("n").desc, col("token"))).cast("int")
       )
 
-  private val vocabIdsCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val VocabIdsArtifact = graft.Artifacts.declare("bpe_vocab", graft.Artifacts.RangeSorted("id"))
 
   /** The corpus vocab-id table as a build-once artifact — shared by
     * `q_bpe_vocab_ids` and the packed-row emitter (`q_pack_tokens`),
@@ -342,8 +341,7 @@ object PackSequences {
     */
   private[graft] def vocabIdsTable(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     def build = vocabOf(Tables.documents(s, dir), Bpe.encodedCorpus(s, dir))
-    if (Tables.noArtifactCache) build
-    else graft.Artifacts.cachedIn(vocabIdsCache, s, dir, "bpe_vocab", "id")(build)
+    graft.Artifacts.get(s, dir, VocabIdsArtifact)(build)
   }
 
   /** [[emit]] over an externally-supplied encode mapping and vocab id

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
-import graft.Tables.PinOps
+import graft.{Artifacts, QueryDef, Tables}
 import org.apache.spark.sql.functions._
 
 /** Dataset profiling / OLAP utility operators a training-data pipeline runs
@@ -11,6 +10,9 @@ import org.apache.spark.sql.functions._
   * that degrades at 100 TB.
   */
 object Profiling {
+
+  /** `q_drift_psi`'s (source x bucket) census, built once per fixture. */
+  private val DriftCensus = Artifacts.declare("drift_psi_census", Artifacts.SessionOnly)
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
@@ -373,15 +375,18 @@ object Profiling {
       "q_drift_psi",
       "distribution-drift monitor: per-source Population Stability Index of the doc-length distribution vs the whole corpus (the between-snapshot check a training pipeline runs on every new crawl; PSI > 0.2 conventionally flags actionable drift). Fixed-width capped buckets, Laplace 0.5-smoothing so empty buckets contribute their full drift term instead of a log(0); each term is cast to decimal(18,12) before the per-source sum so the <=10-term addition is order-independent and hash-matches the oracle",
       (s, dir) => {
-        val b = Tables
-          .documents(s, dir)
-          .select(col("source"), least(lit(9L), expr("n_chars div 200")).as("bkt"))
         // ONE documents scan: every downstream frame re-aggregates the
         // tiny (source x bucket) census — deriving cb/tot straight from
-        // `b` would duplicate the scan per reference (the repo's
+        // the scan would duplicate it per reference (the repo's
         // reference-an-unmaterialized-frame-once rule; PlanSpec pins the
         // single scan)
-        val sb     = b.groupBy(col("source"), col("bkt")).agg(count(lit(1)).as("n_sb")).pin()
+        val sb = Artifacts.get(s, dir, DriftCensus) {
+          Tables
+            .documents(s, dir)
+            .select(col("source"), least(lit(9L), expr("n_chars div 200")).as("bkt"))
+            .groupBy(col("source"), col("bkt"))
+            .agg(count(lit(1)).as("n_sb"))
+        }
         val srcTot = sb.groupBy(col("source")).agg(sum(col("n_sb")).as("n_s"))
         val cb     = sb.groupBy(col("bkt")).agg(sum(col("n_sb")).as("n_b"))
         val tot    = sb.agg(sum(col("n_sb")).as("n"))

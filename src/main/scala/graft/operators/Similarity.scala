@@ -479,8 +479,7 @@ object Similarity {
 
   private[graft] val DbscanMinPts = 2
 
-  private val dbscanCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val DbscanArtifact = graft.Artifacts.declare("embed_dbscan", graft.Artifacts.RangeSorted("cluster"))
 
   /** The `q_embed_dbscan` cluster census as a build-once artifact — r20
     * optimization: the census is a pure function of the embedding table
@@ -489,9 +488,9 @@ object Similarity {
     * (measured: 2.6–3.4 s per bench pass at sf0.1) while every other
     * clustering readout in the engine (graph_components, semantic_cc,
     * ahash_clusters) already ships as an artifact. Same
-    * [[graft.Artifacts.cachedInTracked]] treatment: session pin by
-    * default, durable range-sorted parquet under `graft.artifact.root`,
-    * the tracked build reclaims the loop's pins.
+    * [[graft.Artifacts]] treatment: session pin by default, durable
+    * range-sorted parquet under `graft.artifact.root`, the tracked build
+    * reclaims the loop's pins.
     */
   private[graft] def dbscanCensus(
       s: org.apache.spark.sql.SparkSession,
@@ -501,19 +500,8 @@ object Similarity {
       val emb = Tables.fanout(Tables.embeddings(s, dir))
       dbscanFromPairsTracked(embedNearDupPairs(emb, threshold = 0.0), emb)
     }
-    if (Tables.noArtifactCache) {
-      // full-lineage mode still needs the tracked pins (the CC loop's
-      // pinIter is structural), but repeated invocations must not
-      // accumulate census copies for the session lifetime (r20 ADVICE):
-      // each new materialization reclaims the previous generation.
-      val built = graft.Artifacts.materializeTracked(build)
-      Option(dbscanNoCachePrev.put((s, dir), built)).foreach(Tables.unpin)
-      built
-    } else graft.Artifacts.cachedInTracked(dbscanCache, s, dir, "embed_dbscan", "cluster")(build)
+    graft.Artifacts.getTracked(s, dir, DbscanArtifact)(build)
   }
-
-  private val dbscanNoCachePrev =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
@@ -788,10 +776,7 @@ object Similarity {
         // per-vector scoring readout still runs per query
         labelCentroidMarginFrom(
           Tables.fanout(Tables.embeddings(s, dir)),
-          if (Tables.noArtifactCache) centsRowOf(Tables.fanout(Tables.embeddings(s, dir)))
-          else
-            graft.Artifacts.cachedIn(centsRowCache, s, dir, "sim_label_cents", "n")(
-              centsRowOf(Tables.fanout(Tables.embeddings(s, dir))))
+          graft.Artifacts.get(s, dir, CentsRowArtifact)(centsRowOf(Tables.fanout(Tables.embeddings(s, dir))))
         ),
       Some(s"""WITH comp AS (
               |  SELECT vec_id, label, i AS d, cast(embedding[i] as double) AS x
@@ -835,8 +820,7 @@ object Similarity {
     * scored rows (at 10^9 vectors that shuffle would dwarf the metric
     * itself); the only shuffle left is the L-group final rollup.
     */
-  private val centsRowCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val CentsRowArtifact = graft.Artifacts.declare("sim_label_cents", graft.Artifacts.RangeSorted("n"))
 
   /** The one-row packed label-centroid table of [[labelCentroidMargin]]
     * (decimal-exact means narrowed to float), exposed for the artifact

@@ -24,19 +24,21 @@ object SourceQueries {
     )
   )
 
-  /** Materialize the fixture-backed event log once per sfDir. A `_SUCCESS`
-    * marker written only after ALL partition files exist guards against
-    * reusing a partially-written log from a crashed earlier run.
+  /** Bump when the log's file layout or its fixture-to-message mapping
+    * changes, so a log left in /tmp by other code is rebuilt, not served.
     */
-  def logDirFor(spark: SparkSession, sfDir: String): String = {
-    val dir     = s"/tmp/graft-eventlog-${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    val success = new java.io.File(dir, "_SUCCESS")
-    if (!success.exists()) {
-      EventLogWriter.materialize(spark, sfDir, dir)
-      success.createNewFile()
-    }
-    dir
-  }
+  private val logFormatVersion = 1
+
+  /** Materialize the fixture-backed event log once per sfDir. The
+    * `_SUCCESS` marker, written only after ALL partition files exist and
+    * holding the format version, guards against reusing a partially
+    * written log from a crashed earlier run or one another version wrote.
+    */
+  def logDirFor(spark: SparkSession, sfDir: String): String =
+    graft.Artifacts.buildOnceDir(
+      s"/tmp/graft-eventlog-${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}",
+      s"graft-eventlog v$logFormatVersion"
+    )(dir => EventLogWriter.materialize(spark, sfDir, dir))
 
   def sourceFrame(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.format(EventLogSource.ShortName).option("path", logDirFor(spark, sfDir)).load()

@@ -80,37 +80,21 @@ object StarTree {
     */
   private val cubeFormatVersion = 2
 
-  private val buildLock = new Object
-
   /** Materialize once per (sfDir, spec): the directory name folds in a hash
     * of (dims, metrics, format version), so a cube left in /tmp by an older
     * code version with a different layout simply misses the lookup and a
-    * fresh one is built. The build is serialized under a JVM-wide lock with
-    * the `_SUCCESS`-recheck inside (same guard pattern as the event log
-    * fixture) so two concurrent sessions can't race the overwrite-mode
-    * write into the same directory; `_SUCCESS` is written by Spark's
-    * committer after all slices land.
+    * fresh one is built; the version is also the `_SUCCESS` marker's
+    * content, so a torn or foreign directory under the same name rebuilds.
     */
   def cubeDirFor(spark: SparkSession, sfDir: String): String = {
     val spec = s"v$cubeFormatVersion|${cubeDims.mkString(",")}|${cubeMetrics.mkString(",")}"
     val specHash = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(spec)
     )
-    val dir =
-      s"/tmp/graft-startree-${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}-$specHash"
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
-      buildLock.synchronized {
-        if (!new java.io.File(dir, "_SUCCESS").exists()) {
-          materialize(
-            Tables.orders(spark, sfDir),
-            dims = cubeDims,
-            metrics = cubeMetrics,
-            path = dir
-          )
-        }
-      }
-    }
-    dir
+    graft.Artifacts.buildOnceDir(
+      s"/tmp/graft-startree-${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}-$specHash",
+      s"graft-startree $spec"
+    )(dir => materialize(Tables.orders(spark, sfDir), dims = cubeDims, metrics = cubeMetrics, path = dir))
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.Tables.PinOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -365,8 +365,7 @@ object TextAnalysis {
     (scores, pins :+ co)
   }
 
-  private val textrankCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val TextrankArtifact = Artifacts.declare("textrank_scores", Artifacts.RangeSorted("node"))
 
   /** TextRank score table (word, s in 1e-12 units) as a build-once
     * artifact — a keyword prior is reused across runs like the graph
@@ -376,19 +375,12 @@ object TextAnalysis {
       s: org.apache.spark.sql.SparkSession,
       dir: String
   ): org.apache.spark.sql.DataFrame =
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked {
-        // shared seq_freq artifact as the frequency input (r19 trim)
-        val f              = graft.Tables.pinIter(TextShared.seqFreq(s, dir))
-        val (scores, pins) = buildTextrankFromFreqTracked(f)
-        (scores, pins :+ f)
-      }
-    else
-      graft.Artifacts.cachedInTracked(textrankCache, s, dir, "textrank_scores", "node") {
-        val f              = graft.Tables.pinIter(TextShared.seqFreq(s, dir))
-        val (scores, pins) = buildTextrankFromFreqTracked(f)
-        (scores, pins :+ f)
-      }
+    Artifacts.getTracked(s, dir, TextrankArtifact) {
+      // shared seq_freq artifact as the frequency input (r19 trim)
+      val f              = graft.Tables.pinIter(TextShared.seqFreq(s, dir))
+      val (scores, pins) = buildTextrankFromFreqTracked(f)
+      (scores, pins :+ f)
+    }
 
   /** Input columns + quality metrics (`n_tok`, `n_char`, `avg_tok_len`,
     * `punct_ratio`, `stop_ratio`, `quality`) — shared by query and tests.
@@ -1196,8 +1188,7 @@ object TextAnalysis {
     contaminationBloomDef
   ) ++ defs2
 
-  private val contamGramsCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val ContamGramsArtifact = Artifacts.declare("contam_grams", Artifacts.RangeSorted("doc_id"))
 
   /** The distinct (doc_id, split, g) 13-gram frame behind the
     * decontamination checks — full-md5 grams, the GPT-3 convention.
@@ -1233,12 +1224,7 @@ object TextAnalysis {
         // function of the corpus — a build-once artifact (r20: this was a
         // per-call pin, so every bench pass re-ran the corpus-wide gram
         // explode + distinct)
-        val gramDocs =
-          if (Tables.noArtifactCache)
-            Tables.pin(contamGramDocs(toks))
-          else
-            graft.Artifacts.cachedIn(contamGramsCache, s, dir, "contam_grams", "doc_id")(
-              contamGramDocs(toks))
+        val gramDocs   = Artifacts.get(s, dir, ContamGramsArtifact)(contamGramDocs(toks))
         val trainGrams = gramDocs.filter(col("split") === "train").select(col("g")).distinct()
         val testGrams  = gramDocs.filter(col("split") === "test")
         val hits       = testGrams.join(trainGrams, Seq("g"), "left_semi")
@@ -1269,45 +1255,35 @@ object TextAnalysis {
              |  (SELECT count(DISTINCT teg.g) FROM teg JOIN trg USING (g)) AS n_shared_grams""".stripMargin)
     )
 
-  private val tokCountsCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val TokCountsArtifact = Artifacts.declare("tok_counts", Artifacts.RangeSorted("tok"))
 
   /** Corpus token-frequency census (tok, c) as a build-once artifact —
     * r20: q_text_pmi, q_text_topwords and q_text_zipf each re-ran the
     * corpus token explode + count per call; one cached aggregation (the
     * Heaps'-law sublinear vocabulary frame) serves all three.
     */
-  private[graft] def tokCountsTable(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    def build = Tables
-      .fanout(Tables.documents(s, dir))
-      .select(explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("tok"))
-      .agg(count(lit(1)).as("c"))
-    if (Tables.noArtifactCache) build
-    else graft.Artifacts.cachedIn(tokCountsCache, s, dir, "tok_counts", "tok")(build)
-  }
+  private[graft] def tokCountsTable(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.get(s, dir, TokCountsArtifact) {
+      Tables
+        .fanout(Tables.documents(s, dir))
+        .select(explode(tokens(col("text"))).as("tok"))
+        .groupBy(col("tok"))
+        .agg(count(lit(1)).as("c"))
+    }
 
   /** The lm_bgdoc artifact getter, shared by the LM-score and PMI gates
     * (both consume the same exploded bigram frame).
     */
-  private[graft] def lmBgdocTable(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    def bgdocB = lmBgdocOf(Tables.fanout(Tables.documents(s, dir)))
-    // no-cache mode returns the UNPINNED frame: full lineage is the point
-    // of that mode, and the per-call Tables.pin here leaked one checkpoint
-    // generation per invocation for the session lifetime (r20 ADVICE).
-    // Consumers that reference the frame twice just recompute the explode.
-    if (Tables.noArtifactCache) bgdocB
-    // session pin keyed by doc_id (r21): the hot consumer (the lm_score
-    // scoring join + groupBy(doc_id, lang)) reads it exchange-free; PMI
-    // and the one-time lm_terms build group by bigram keys and reshuffle
-    // regardless of layout, so doc_id is the only key that pays per call
-    else graft.Artifacts.cachedIn(lmBgdocCache, s, dir, "lm_bgdoc", "doc_id", Seq("doc_id"))(bgdocB)
-  }
+  private[graft] def lmBgdocTable(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.get(s, dir, LmBgdocArtifact)(lmBgdocOf(Tables.fanout(Tables.documents(s, dir))))
 
-  private val lmBgdocCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  private val lmTermsCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  // session pin keyed by doc_id (r21): the hot consumer (the lm_score
+  // scoring join + groupBy(doc_id, lang)) reads it exchange-free; PMI and
+  // the one-time lm_terms build group by bigram keys and reshuffle
+  // regardless of layout, so doc_id is the only key that pays per call
+  private val LmBgdocArtifact =
+    Artifacts.declare("lm_bgdoc", Artifacts.RangeSorted("doc_id"), pinKeys = Seq("doc_id"))
+  private val LmTermsArtifact = Artifacts.declare("lm_terms", Artifacts.RangeSorted("bg"))
 
   private val bloomBytesCache =
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), Array[Byte]]()
@@ -1361,19 +1337,18 @@ object TextAnalysis {
         val testDocs = Tables.documents(s, dir).filter(b >= 230)
         def buildBloom =
           graft.streaming.StreamingPipelines.buildGramBloom(testDocs, numBits = 1 << 23, numHashes = 5)
-        // build OUTSIDE the map update (the cached()/cachedIn discipline):
-        // computeIfAbsent would run the full bloom-build Spark job while
-        // holding the ConcurrentHashMap bin lock, blocking concurrent
-        // queries that hash to the same bin (r20 ADVICE)
-        val bloomBytes =
-          if (Tables.noArtifactCache) buildBloom
-          else {
-            bloomBytesCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-            Option(bloomBytesCache.get((s, dir))).getOrElse {
-              val bytes = buildBloom
-              Option(bloomBytesCache.putIfAbsent((s, dir), bytes)).getOrElse(bytes)
-            }
+        // build OUTSIDE the map update: computeIfAbsent would run the
+        // full bloom-build Spark job while holding the ConcurrentHashMap
+        // bin lock, blocking concurrent queries that hash to the same bin
+        // (r20 ADVICE). The bytes become a plan literal, so no-cache mode
+        // (which exists to show lineage) has nothing to gain by rebuilding.
+        val bloomBytes = {
+          bloomBytesCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
+          Option(bloomBytesCache.get((s, dir))).getOrElse {
+            val bytes = buildBloom
+            Option(bloomBytesCache.putIfAbsent((s, dir), bytes)).getOrElse(bytes)
           }
+        }
         // train grams that might be test grams: candidates are exact on
         // the train side (they ARE train grams) and fpp-loose on the test
         // side — the equi-join against real test grams below removes that
@@ -1410,6 +1385,13 @@ object TextAnalysis {
              |  (SELECT count(1) FROM toks WHERE split = 'test') AS n_test_docs,
              |  (SELECT count(DISTINCT teg.g) FROM teg JOIN trg USING (g)) AS n_shared_grams""".stripMargin)
     )
+
+  /** Per-source stats of `q_mixture_plan` and `q_sample_temperature`:
+    * |sources|-row frames every reference of the query re-reads, built
+    * once per fixture.
+    */
+  private val MixtureStats = Artifacts.declare("mixture_source_tokens", Artifacts.SessionOnly)
+  private val SampleStats  = Artifacts.declare("sample_source_docs", Artifacts.SessionOnly)
 
   private val defs2: Seq[QueryDef] = Seq(
     QueryDef(
@@ -1600,12 +1582,13 @@ object TextAnalysis {
       "q_mixture_plan",
       "training-mixture planner (the stage whose output q_sample_temperature consumes): per-source TOKEN counts, temperature-weighted shares (n_tokens^0.5 — sqrt for the same IEEE-correctly-rounded reason as the sampler), and expected EPOCHS per source under a half-corpus token budget. Epochs > 1 flags sources the plan would repeat (the repeats-hurt-after-4-epochs accounting a data-constrained run needs BEFORE training); the whole query is one token-count aggregation plus arithmetic over the |sources|-row frame",
       (s, dir) => {
-        val stats = Tables
-          .fanout(Tables.documents(s, dir))
-          .groupBy(col("source"))
-          .agg(sum(size(split(col("text"), " ")).cast("long")).cast("long").as("n_tokens"))
-          .withColumn("w", sqrt(col("n_tokens").cast("double")).cast("decimal(18,12)"))
-          .pin()
+        val stats = Artifacts.get(s, dir, MixtureStats) {
+          Tables
+            .fanout(Tables.documents(s, dir))
+            .groupBy(col("source"))
+            .agg(sum(size(split(col("text"), " ")).cast("long")).cast("long").as("n_tokens"))
+            .withColumn("w", sqrt(col("n_tokens").cast("double")).cast("decimal(18,12)"))
+        }
         val tot = stats.agg(
           sum(col("w")).cast("double").as("sw"),
           sum(col("n_tokens")).cast("long").as("t_tot")
@@ -1649,11 +1632,12 @@ object TextAnalysis {
         // all derive from it — unchecked, each reference re-scans documents
         // (the plan pin counts parquet scans to hold this at one data pass).
         // The decimal cast makes the cross-source weight sum order-free.
-        val stats = docs
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("n_docs"))
-          .withColumn("w", sqrt(col("n_docs").cast("double")).cast("decimal(18,12)"))
-          .pin()
+        val stats = Artifacts.get(s, dir, SampleStats) {
+          docs
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("n_docs"))
+            .withColumn("w", sqrt(col("n_docs").cast("double")).cast("decimal(18,12)"))
+        }
         val tot = stats.agg(
           sum(col("w")).cast("double").as("sw"),
           sum(col("n_docs")).cast("long").as("n_tot")
@@ -1850,9 +1834,7 @@ object TextAnalysis {
         // so the scoring pass runs with ZERO exchanges. No per-call
         // fanoutBy: it would re-add the exchange the keyed pin paid for.
         val bgdoc = lmBgdocTable(s, dir)
-        val terms =
-          if (Tables.noArtifactCache) lmTermsOf(bgdoc)
-          else graft.Artifacts.cachedIn(lmTermsCache, s, dir, "lm_terms", "bg")(lmTermsOf(bgdoc))
+        val terms = Artifacts.get(s, dir, LmTermsArtifact)(lmTermsOf(bgdoc))
         // broadcast(terms) explicitly: terms is the VOCAB-shaped side (the
         // only broadcastable one at corpus scale) — left to size
         // estimates, the planner broadcast bgdoc at small SFs, which puts

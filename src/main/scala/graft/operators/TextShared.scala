@@ -78,10 +78,8 @@ object TextShared {
       .groupBy(col("s"))
       .agg(count(lit(1)).as("w"))
 
-  private val freqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val freqEvenCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val FreqArtifact     = graft.Artifacts.declare("seq_freq", graft.Artifacts.RangeSorted("s"))
+  private val FreqEvenArtifact = graft.Artifacts.declare("seq_freq_even", graft.Artifacts.RangeSorted("s"))
 
   /** [[seqFreqFrom]] over the full fixture corpus as a BUILD-ONCE artifact
     * (seq_freq) — r19 cold-budget trim: before this, EACH of the BPE /
@@ -93,23 +91,14 @@ object TextShared {
     * discipline.
     */
   private[graft] def seqFreq(s: SparkSession, dir: String): DataFrame =
-    if (graft.Tables.noArtifactCache)
-      seqFreqFrom(graft.Tables.fanout(graft.Tables.documents(s, dir)))
-    else
-      graft.Artifacts.cachedIn(freqCache, s, dir, "seq_freq", "s")(
-        seqFreqFrom(graft.Tables.fanout(graft.Tables.documents(s, dir))))
+    graft.Artifacts.get(s, dir, FreqArtifact)(seqFreqFrom(graft.Tables.fanout(graft.Tables.documents(s, dir))))
 
   /** [[seqFreq]] over the even-doc_id TRAINING half (seq_freq_even) — the
     * shared input of the three `*_encode_heldout` trainers.
     */
   private[graft] def seqFreqEven(s: SparkSession, dir: String): DataFrame =
-    if (graft.Tables.noArtifactCache)
-      seqFreqFrom(graft.Tables.fanout(
-        graft.Tables.documents(s, dir).filter(col("doc_id") % 2 === 0)))
-    else
-      graft.Artifacts.cachedIn(freqEvenCache, s, dir, "seq_freq_even", "s")(
-        seqFreqFrom(graft.Tables.fanout(
-          graft.Tables.documents(s, dir).filter(col("doc_id") % 2 === 0))))
+    graft.Artifacts.get(s, dir, FreqEvenArtifact)(
+      seqFreqFrom(graft.Tables.fanout(graft.Tables.documents(s, dir).filter(col("doc_id") % 2 === 0))))
 
   // ---- DuckDB side (SQL text) ----
 

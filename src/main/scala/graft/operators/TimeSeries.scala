@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -82,12 +82,12 @@ object TimeSeries {
   /** Gap-fill an observed `(keys..., day, cnt)` frame to the dense
     * [min day, max day] grid (per key combination when `keys` is
     * non-empty), absent cells becoming genuine zeros. `d0` is tiny
-    * (series-grain) — pinned because the bounds, the key set, and the
-    * left join all read it. ONE implementation for every series query:
-    * a grid fix applied here cannot silently diverge a sibling.
+    * (series-grain) and read three times (the bounds, the key set, and
+    * the left join), so callers pass a pinned artifact. ONE
+    * implementation for every series query: a grid fix applied here
+    * cannot silently diverge a sibling.
     */
-  private def dense(d0in: org.apache.spark.sql.DataFrame, keys: Seq[String]) = {
-    val d0 = Tables.pin(d0in)
+  private def dense(d0: org.apache.spark.sql.DataFrame, keys: Seq[String]) = {
     val grid = d0
       .agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
       .select(explode(sequence(col("lo"), col("hi"))).as("day"))
@@ -99,11 +99,32 @@ object TimeSeries {
       .select(keys.map(col) ++ Seq(col("day"), coalesce(col("cnt"), lit(0L)).as("cnt")): _*)
   }
 
+  /** The observed series every series query densifies, built once per
+    * fixture: daily event counts, per-type daily counts, and the sparse
+    * cohort revenue series of `q_ts_interp`.
+    */
+  private val DailyCounts     = Artifacts.declare("ts_daily_counts", Artifacts.SessionOnly)
+  private val TypeDailyCounts = Artifacts.declare("ts_type_daily_counts", Artifacts.SessionOnly)
+  private val InterpObserved  = Artifacts.declare("ts_interp_observed", Artifacts.SessionOnly)
+
   /** Dense daily counts over [min day, max day]. */
   private def denseDaily(s: org.apache.spark.sql.SparkSession, dir: String) =
     dense(
-      Tables.events(s, dir).select(day).groupBy(col("day")).agg(count(lit(1)).as("cnt")),
+      Artifacts.get(s, dir, DailyCounts)(
+        Tables.events(s, dir).select(day).groupBy(col("day")).agg(count(lit(1)).as("cnt"))),
       Seq.empty
+    )
+
+  /** Dense per-event-type daily counts over each type's [min, max] day. */
+  private def denseByType(s: org.apache.spark.sql.SparkSession, dir: String) =
+    dense(
+      Artifacts.get(s, dir, TypeDailyCounts)(
+        Tables
+          .events(s, dir)
+          .select(col("event_type"), day)
+          .groupBy(col("event_type"), col("day"))
+          .agg(count(lit(1)).as("cnt"))),
+      Seq("event_type")
     )
 
   /** Shared oracle CTE chain ending in dense `d(day, cnt)`. */
@@ -135,9 +156,10 @@ object TimeSeries {
     * two IGNORE-NULLS running windows over the days-sized frame (the
     * documented post-aggregation exception to the no-global-window
     * rule). Zero floating point until the final cents-to-double readout.
+    * `d0` is read twice (the bounds and the left join): callers with a
+    * scan-backed series pass a pinned frame.
     */
-  private[graft] def interpSeries(obs0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val d0 = Tables.pin(obs0)
+  private[graft] def interpSeries(d0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val grid = d0
       .agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
       .select(explode(sequence(col("lo"), col("hi"))).as("day"))
@@ -169,11 +191,12 @@ object TimeSeries {
       "LINEAR-INTERPOLATION gap-fill of a sparse daily measurement series (the metric-imputation twin of the zero-fill gap queries — a missing day in a MEASUREMENT series is unknown, not zero): daily purchase revenue of a sparse user cohort (user_id % 101 = 7) in integer cents, densified to the observed [min, max] day grid, with each missing interior day linearly interpolated between its bracketing observations as EXACT INTEGER arithmetic — interp = (prev*(next_day - day) + next*(day - prev_day)) div span, the convex-combination form whose non-negative numerator makes Spark div and DuckDB // agree (floor-division discipline) — no float until the final cents/100 readout. Carry scaffolding is two IGNORE-NULLS running windows over the days-sized post-aggregation frame. Output per day: observed flag, cents, value",
       (s, dir) =>
         interpSeries(
-          Tables
-            .events(s, dir)
-            .filter(col("event_type") === "purchase" && pmod(col("user_id"), lit(101)) === 7)
-            .groupBy(day)
-            .agg(sum(floor(col("value") * 100 + lit(0.5)).cast("long")).as("vc"))
+          Artifacts.get(s, dir, InterpObserved)(
+            Tables
+              .events(s, dir)
+              .filter(col("event_type") === "purchase" && pmod(col("user_id"), lit(101)) === 7)
+              .groupBy(day)
+              .agg(sum(floor(col("value") * 100 + lit(0.5)).cast("long")).as("vc")))
         ),
       Some("""WITH obs AS (
              |  SELECT cast(floor(epoch(ts)) as bigint) // 86400 AS day,
@@ -281,14 +304,7 @@ object TimeSeries {
       "q_ts_forecast",
       "seasonal-naive forecast evaluation per event type: predict day t's count with the count at day t-7 (the standard do-no-harm baseline every real forecaster must beat), scored MAE + MAPE over the evaluable days of the DENSE per-type day grid — without gap-filling, one quiet (event_type, day) cell would shift every later lag-7 pair off its weekday. MAE covers all eval days (zeros included); MAPE only days with a nonzero actual (the standard MAPE domain). BOTH metrics stay in integer space until one final division chain (per-day percentage errors as floor'd picounits — the CUSUM discipline), so every emitted value is a raw deterministic double, never round()ed",
       (s, dir) => {
-        val d = dense(
-          Tables
-            .events(s, dir)
-            .select(col("event_type"), day)
-            .groupBy(col("event_type"), col("day"))
-            .agg(count(lit(1)).as("cnt")),
-          Seq("event_type")
-        )
+        val d = denseByType(s, dir)
         val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
         d.select(col("event_type"), col("cnt"), lag(col("cnt"), 7).over(w).as("pred"))
           .filter(col("pred").isNotNull)
@@ -332,14 +348,7 @@ object TimeSeries {
       "q_ts_ewma",
       "finite-window EWMA (alpha = 1/2) of the per-type dense daily count series — the smoothed ingest-rate level an alerting layer thresholds against. DYADIC-EXACT: weights are w_k = 2^-(k+1) for lags 0..14 with the geometric tail folded into w_15 = 2^-15 (weights sum to exactly 1), so the smoothed value times 2^15 is an INTEGER window sum (16 lag columns over one days-sized window spec), and the emitted double is that exact integer divided by 2^15 — an exponent shift, EXACT in IEEE, zero rounding anywhere (the only EWMA formulation two engines can agree on bit-for-bit; a recursive float EWMA accumulates order-dependent rounding). Per type: the latest fully-windowed day, its raw count, and the smoothed level",
       (s, dir) => {
-        val d = dense(
-          Tables
-            .events(s, dir)
-            .select(col("event_type"), day)
-            .groupBy(col("event_type"), col("day"))
-            .agg(count(lit(1)).as("cnt")),
-          Seq("event_type")
-        )
+        val d = denseByType(s, dir)
         val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
         // scaled = sum_{k=0..14} x_{t-k} * 2^(14-k) + x_{t-15}; the dense
         // grid is contiguous, so l15 non-null implies every smaller lag is
@@ -400,14 +409,7 @@ object TimeSeries {
       "q_ts_holt",
       s"Holt double-exponential (level + trend) smoothing of the per-type dense daily count series with a 3-day-ahead forecast — the trend-aware upgrade of q_ts_ewma's level and the first real model past q_ts_forecast's seasonal-naive baseline. ENGINE-EXACT by construction: with dyadic alpha = 1/2, beta = 1/4 the recursion over the last ${HoltSteps + 1} dense days is LINEAR in the observations, so level, trend and forecast are literal integer-weight window sums divided by 2^$holtExp — the weights are derived ONCE in exact dyadic BigInt arithmetic and consumed by BOTH engines as the same literals, every emitted double an exact integer-over-power-of-two (a recursive float Holt accumulates order-dependent rounding no two engines agree on). Per type: the latest fully-windowed day, its raw count, smoothed level, trend per day, and the 3-day forecast",
       (s, dir) => {
-        val d = dense(
-          Tables
-            .events(s, dir)
-            .select(col("event_type"), day)
-            .groupBy(col("event_type"), col("day"))
-            .agg(count(lit(1)).as("cnt")),
-          Seq("event_type")
-        )
+        val d = denseByType(s, dir)
         val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
         def xk(k: Int) =
           if (k == HoltSteps) col("cnt") else lag(col("cnt"), HoltSteps - k).over(w)

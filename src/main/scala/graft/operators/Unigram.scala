@@ -336,8 +336,7 @@ object Unigram {
   private[graft] def trainUnigram(docs: DataFrame, rounds: Int = Rounds): DataFrame =
     trainUnigramTracked(docs, rounds)._1
 
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val VocabArtifact = graft.Artifacts.declare("unigram_vocab", graft.Artifacts.RangeSorted("g"))
 
   /** The trained unigram vocab (g, n, c, li) as a build-once artifact —
     * the [[Bpe.trainedMerges]] treatment (durable under
@@ -357,14 +356,10 @@ object Unigram {
       val (vocab, pins) = trainUnigramWeightedTracked(seqs0, Rounds)
       (vocab, seqs0 +: pins)
     }
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(build)
-    else
-      graft.Artifacts.cachedInTracked(vocabCache, s, dir, "unigram_vocab", "g")(build)
+    graft.Artifacts.getTracked(s, dir, VocabArtifact)(build)
   }
 
-  private val vocabEvenCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val VocabEvenArtifact = graft.Artifacts.declare("unigram_vocab_even", graft.Artifacts.RangeSorted("g"))
 
   /** The held-out gate's even-half vocab as its own build-once artifact
     * (the [[Bpe.trainedMergesEven]] rationale — the hard-EM rounds are a
@@ -381,10 +376,7 @@ object Unigram {
       val (vocab, pins) = trainUnigramWeightedTracked(seqs0, Rounds)
       (vocab, seqs0 +: pins)
     }
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(build)
-    else
-      graft.Artifacts.cachedInTracked(vocabEvenCache, s, dir, "unigram_vocab_even", "g")(build)
+    graft.Artifacts.getTracked(s, dir, VocabEvenArtifact)(build)
   }
 
   /** Viterbi APPLY against a frozen trained vocab: segment each DISTINCT

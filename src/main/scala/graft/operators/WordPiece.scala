@@ -267,8 +267,7 @@ object WordPiece {
       )
   }
 
-  private val mergesCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val MergesArtifact = graft.Artifacts.declare("wordpiece_merges", graft.Artifacts.RangeSorted("round"))
 
   /** The trained WordPiece merge table as a build-once artifact — the
     * [[Bpe.trainedMerges]] treatment (durable under `graft.artifact.root`,
@@ -283,14 +282,10 @@ object WordPiece {
     // a pinIter copy, reclaimed by the loop without touching the artifact
     def build =
       trainWordPieceWeightedTracked(Tables.pinIter(TextShared.seqFreq(s, dir)), Rounds)
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(build)
-    else
-      graft.Artifacts.cachedInTracked(mergesCache, s, dir, "wordpiece_merges", "round")(build)
+    graft.Artifacts.getTracked(s, dir, MergesArtifact)(build)
   }
 
-  private val mergesEvenCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val MergesEvenArtifact = graft.Artifacts.declare("wordpiece_merges_even", graft.Artifacts.RangeSorted("round"))
 
   /** The held-out gate's even-half merge table as its own build-once
     * artifact (the [[Bpe.trainedMergesEven]] rationale).
@@ -303,10 +298,7 @@ object WordPiece {
     // shared seq_freq_even artifact (r19 cold-budget trim)
     def build =
       trainWordPieceWeightedTracked(Tables.pinIter(TextShared.seqFreqEven(s, dir)), Rounds)
-    if (Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(build)
-    else
-      graft.Artifacts.cachedInTracked(mergesEvenCache, s, dir, "wordpiece_merges_even", "round")(build)
+    graft.Artifacts.getTracked(s, dir, MergesEvenArtifact)(build)
   }
 
   // ── oracle SQL ─────────────────────────────────────────────────────────

@@ -1320,8 +1320,7 @@ object CorpusPipeline {
     (censusFromLedger(docs0, lp), pins :+ lp)
   }
 
-  private val ledgerCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val LedgerArtifact = graft.Artifacts.declare("corpus_ledger", graft.Artifacts.RangeSorted("doc_id"))
 
   /** The drop ledger as a build-once artifact — `corpus_ledger` REPLACES
     * the former `corpus_funnel` census artifact: the census is a cheap
@@ -1335,10 +1334,7 @@ object CorpusPipeline {
       graft.Tables.documents(s, dir),
       graft.Tables.fanout(graft.Tables.embeddings(s, dir)),
       graft.operators.IvfSimilarity.assignments(s, dir))
-    if (graft.Tables.noArtifactCache)
-      graft.Artifacts.materializeTracked(build)
-    else
-      graft.Artifacts.cachedInTracked(ledgerCache, s, dir, "corpus_ledger", "doc_id")(build)
+    graft.Artifacts.getTracked(s, dir, LedgerArtifact)(build)
   }
 
   /** The funnel's shared DuckDB CTE chain (quality → exact → semantic CC
