@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# One-shot gate replay: compile, tests, oracle verify, bench.
+# One-shot gate replay: compile, tests, oracle verify, benchmark checks, bench.
 # Usage: scripts/check_all.sh [sf]   (default 0.01)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -16,6 +16,14 @@ python3 scripts/verify_local.py "$OUT" "/root/testdata/sf$SF"
 echo "== double-run determinism at sf$SF"
 sbt -batch "runMain graft.Verify /root/testdata/sf$SF ${OUT}-b"
 python3 scripts/diff_runs.py "$OUT" "${OUT}-b"
+
+echo "== benchmark checks: self-test, then one checked ingest run"
+python3 perfbench/test_checks.py
+python3 perfbench/run.py --workload ingest --seed 1 --seconds 10 | tail -n 1 | tee "$OUT-perfbench.json"
+if grep -q '"correct": *false' "$OUT-perfbench.json"; then
+  echo "perfbench ingest: an output check failed" >&2
+  exit 1
+fi
 
 echo "== bench at sf0.1"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch 'runMain graft.Bench' | grep '"metric"'

@@ -24,8 +24,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * materializes one from the fixtures). Every structural element of the
   * reference maps onto the DSv2 seam:
   *
-  *   - one [[InputPartition]] per topic partition — the per-partition
-  *     exclusive consumer (`PulsarConsumerFactory.java:35-42`, S17);
+  *   - one [[EventLogSlice]] per topic partition, read by its own consumer
+  *     in offset order — the per-partition exclusive consumer
+  *     (`PulsarConsumerFactory.java:35-42`, S17). Slices are packed into
+  *     Spark input splits by Spark's own file-split policy
+  *     ([[EventLogSplits]]), so a scan runs about one task per core, not one
+  *     per topic partition;
   *   - checkpointed `(partition -> long offset)` map [[EventLogOffset]] using
   *     [[OffsetCodec]]'s non-dense longs — `LongMsgOffset` flattening
   *     (`MessageIdUtils.java:25-43`, S9/S10); offsets are matched by range
@@ -130,37 +134,62 @@ object EventLogSource {
     * [[readLogStream]] instead.
     */
   def readLog(file: java.io.File): Seq[(Long, Array[Byte])] =
-    withLogSource(file)(it => it.toList)
+    withLogSource(file)(_.map(l => (l.offset, l.payload)).toList)
 
-  /** Streaming [[readLog]]: one line in memory at a time, so reader memory
-    * really is the documented O(distinct-keys) bound on compacted scans
-    * (a `.toList` here would silently make every reader O(slice) however
-    * careful the downstream state is). The open Source is handed to
-    * `onOpen` — the PartitionReader tracks and closes it in `close()`
-    * (iterator exhaustion alone must not close: compaction's second pass
-    * may still be pending on another handle).
+  /** Streaming read of the slice `start < offset <= end`: one line in
+    * memory at a time, so reader memory really is the documented
+    * O(distinct-keys) bound on compacted scans (a `.toList` here would
+    * silently make every reader O(slice) however careful the downstream
+    * state is). The open Source is handed to `onOpen` — the PartitionReader
+    * tracks and closes it in `close()` (iterator exhaustion alone must not
+    * close: compaction's second pass may still be pending on another
+    * handle).
     */
-  def readLogStream(file: java.io.File, onOpen: scala.io.Source => Unit): Iterator[(Long, Array[Byte])] = {
+  def readLogStream(
+      file: java.io.File,
+      start: Long,
+      end: Long,
+      onOpen: scala.io.Source => Unit
+  ): Iterator[(Long, Array[Byte])] = {
     val src = scala.io.Source.fromFile(file, "UTF-8")
     onOpen(src)
-    parseLogLines(src)
+    sliceLines(parseLines(src.getLines()), start, end).map(l => (l.offset, l.payload))
   }
 
-  private[sources] def withLogSource[A](file: java.io.File)(f: Iterator[(Long, Array[Byte])] => A): A = {
+  private[sources] def withLogSource[A](file: java.io.File)(f: Iterator[LogLine] => A): A = {
     val src = scala.io.Source.fromFile(file, "UTF-8")
-    try f(parseLogLines(src))
+    try f(parseLines(src.getLines()))
     finally src.close()
   }
 
-  private def parseLogLines(src: scala.io.Source): Iterator[(Long, Array[Byte])] =
-    src.getLines().filter(_.nonEmpty).flatMap { line =>
-      // a corrupt line without the offset\tpayload separator is dropped,
-      // consistent with the pipeline's drop-on-malformed posture (the
-      // payload-level equivalent lives downstream in JsonDecode)
+  /** One log line with its offset parsed; the payload bytes are decoded
+    * only on demand, so lines a read skips or never reaches cost no copy.
+    */
+  private[sources] final class LogLine(val offset: Long, line: String, tab: Int) {
+    def payload: Array[Byte] = line.substring(tab + 1).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  private[sources] def parseLines(lines: Iterator[String]): Iterator[LogLine] =
+    lines.flatMap { line =>
+      // a corrupt line without the offset\tpayload separator (or with a
+      // non-numeric offset) is dropped, consistent with the pipeline's
+      // drop-on-malformed posture (the payload-level equivalent lives
+      // downstream in JsonDecode)
       val i = line.indexOf('\t')
       if (i < 0) None
-      else line.substring(0, i).toLongOption.map(off => (off, line.substring(i + 1).getBytes("UTF-8")))
+      else
+        try Some(new LogLine(java.lang.Long.parseLong(line, 0, i, 10), line, i))
+        catch { case _: NumberFormatException => None }
     }
+
+  /** The lines with `start < offset <= end`. Offsets never decrease within a
+    * partition file ([[EventLogWriter]] sorts them; a broker's partition is
+    * ordered the same way), so the read stops at the first offset past
+    * `end`, and every line sharing the offset `end` (a producer batch) is
+    * inside the slice.
+    */
+  private[sources] def sliceLines(lines: Iterator[LogLine], start: Long, end: Long): Iterator[LogLine] =
+    lines.filter(_.offset > start).takeWhile(_.offset <= end)
 }
 
 /** Checkpointed offsets: highest consumed offset per partition (-1 = none,
@@ -340,10 +369,10 @@ class EventLogTable(options: Map[String, String]) extends Table with SupportsRea
       // count is a DSv2 custom metric, aggregated in the SQL UI
       override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
         Array(new DroppedMessagesMetric)
-      override def toBatch: Batch =
-        new EventLogBatch(path, extractorClass, required.fieldNames.toSeq, pushed, compactionKey, compactionValidate)
+      private def read = EventLogRead(extractorClass, required.fieldNames.toSeq, compactionKey, compactionValidate)
+      override def toBatch: Batch = new EventLogBatch(path, read, pushed)
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new EventLogMicroBatchStream(path, config, extractorClass, required.fieldNames.toSeq, compactionKey, compactionValidate)
+        new EventLogMicroBatchStream(path, config, read)
     }
 }
 
@@ -416,25 +445,24 @@ object EventLogPushdown {
   }
 }
 
-/** Batch scan: the whole log, one task per partition. */
+/** Batch scan: the whole log, one slice per (pushdown-kept) partition file,
+  * packed into splits by [[EventLogSplits]].
+  */
 class EventLogBatch(
     path: String,
-    extractorClass: Option[String] = None,
-    requiredCols: Seq[String] = EventLogSource.schema.fieldNames.toSeq,
-    pushdown: EventLogPushdown = EventLogPushdown.none,
-    compactKeyField: Option[String] = None,
-    compactKeyValidate: Boolean = true
+    read: EventLogRead,
+    pushdown: EventLogPushdown
 ) extends Batch {
   override def planInputPartitions(): Array[InputPartition] =
-    EventLogSource
-      .partitionFiles(path)
-      .filter { case (p, _) => pushdown.keepsPartition(p) } // file skip
-      .map { case (p, f) =>
-        EventLogInputPartition(
-          p, f.getAbsolutePath, pushdown.startExclusive, pushdown.endInclusive,
-          extractorClass, requiredCols, compactKeyField, compactKeyValidate)
-      }
-      .toArray
+    EventLogSplits.plan(
+      read,
+      EventLogSource
+        .partitionFiles(path)
+        .filter { case (p, _) => pushdown.keepsPartition(p) } // file skip
+        .map { case (p, f) =>
+          EventLogSlice(p, f.getAbsolutePath, pushdown.startExclusive, pushdown.endInclusive) -> f.length()
+        }
+    )
   override def createReaderFactory(): PartitionReaderFactory = EventLogReaderFactory
 }
 
@@ -442,10 +470,7 @@ class EventLogBatch(
 class EventLogMicroBatchStream(
     path: String,
     config: SourceConfig,
-    extractorClass: Option[String] = None,
-    requiredCols: Seq[String] = EventLogSource.schema.fieldNames.toSeq,
-    compactKeyField: Option[String] = None,
-    compactKeyValidate: Boolean = true
+    read: EventLogRead
 ) extends MicroBatchStream
     with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
@@ -468,14 +493,13 @@ class EventLogMicroBatchStream(
     ReadLimit.maxRows(config.maxBatchMessages.toLong)
 
   /** Unbounded latest: last offset currently in each partition log —
-    * STREAMED (fold to the final offset, one line in memory), not a
-    * driver-side materialization of the whole file per trigger.
+    * STREAMED (fold to the final offset, one line in memory, no payload
+    * decoded), not a driver-side materialization of the whole file per
+    * trigger.
     */
   override def latestOffset(): Offset =
     EventLogOffset(EventLogSource.partitionFiles(path).map { case (p, f) =>
-      p -> EventLogSource.withLogSource(f)(
-        _.foldLeft(OffsetCodec.Earliest) { case (_, (o, _)) => o }
-      )
+      p -> EventLogSource.withLogSource(f)(_.foldLeft(OffsetCodec.Earliest)((_, l) => l.offset))
     }.toMap)
 
   /** Admission-controlled latest: cap each partition's advance at maxMsgs
@@ -489,41 +513,46 @@ class EventLogMicroBatchStream(
       case _                                                            => config.maxBatchMessages
     }
     EventLogOffset(EventLogSource.partitionFiles(path).map { case (p, f) =>
-      val from  = startOffsets.getOrElse(p, OffsetCodec.Earliest)
-      var bytes = 0L
-      // streamed: only the <= maxRows ADMITTED offsets materialize, never
-      // the file (the .toSeq must stay inside withLogSource's scope)
-      val taken = EventLogSource.withLogSource(f)(
-        _.filter(_._1 > from)
+      val from     = startOffsets.getOrElse(p, OffsetCodec.Earliest)
+      var advanced = from
+      var bytes    = 0L
+      var admitted = 0
+      // streamed: only the <= maxRows admitted lines decode their payload,
+      // never the file
+      EventLogSource.withLogSource(f)(
+        _.filter(_.offset > from)
           .take(maxRows)
-          .zipWithIndex
-          .takeWhile { case ((_, payload), idx) =>
+          .takeWhile { l =>
             // always admit the first message even if it alone exceeds the cap
             // (Pulsar's batch policy does the same); never over-admit later ones
-            bytes += payload.length; idx == 0 || bytes <= config.maxBatchBytes
+            bytes += l.payload.length; admitted += 1
+            admitted == 1 || bytes <= config.maxBatchBytes
           }
-          .map(_._1._1)
-          .toSeq
+          .foreach(l => advanced = l.offset)
       )
-      val advanced = if (taken.isEmpty) from else taken.last
       // under Trigger.AvailableNow, never advance past the prepared snapshot
       p -> availableNowEnd.map(e => math.min(advanced, e.getOrElse(p, advanced))).getOrElse(advanced)
     }.toMap)
   }
 
+  /** One slice per partition that advanced; admission already caps a
+    * slice's payload at `maxBytes`, so that bounds its size estimate.
+    */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[EventLogOffset].partitionOffsets
     val e = end.asInstanceOf[EventLogOffset].partitionOffsets
-    EventLogSource
-      .partitionFiles(path)
-      .flatMap { case (p, f) =>
-        val from = s.getOrElse(p, OffsetCodec.Earliest)
-        val to   = e.getOrElse(p, OffsetCodec.Earliest)
-        if (to > from)
-          Some(EventLogInputPartition(p, f.getAbsolutePath, from, to, extractorClass, requiredCols, compactKeyField, compactKeyValidate))
-        else None
-      }
-      .toArray
+    EventLogSplits.plan(
+      read,
+      EventLogSource
+        .partitionFiles(path)
+        .flatMap { case (p, f) =>
+          val from = s.getOrElse(p, OffsetCodec.Earliest)
+          val to   = e.getOrElse(p, OffsetCodec.Earliest)
+          if (to > from)
+            Some(EventLogSlice(p, f.getAbsolutePath, from, to) -> math.min(f.length(), config.maxBatchBytes.toLong))
+          else None
+        }
+    )
   }
 
   override def createReaderFactory(): PartitionReaderFactory = EventLogReaderFactory
@@ -534,17 +563,64 @@ class EventLogMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-/** One topic partition slice: rows with start < offset <= end. */
-case class EventLogInputPartition(
-    partition: Int,
-    file: String,
-    start: Long,
-    end: Long,
+/** One topic partition slice: rows of `file` with start < offset <= end. */
+case class EventLogSlice(partition: Int, file: String, start: Long, end: Long)
+
+/** What every reader of one scan shares: the decode seam, the pruned
+  * columns and the compaction settings.
+  */
+case class EventLogRead(
     extractorClass: Option[String] = None,
     requiredCols: Seq[String] = EventLogSource.schema.fieldNames.toSeq,
     compactKeyField: Option[String] = None,
     compactKeyValidate: Boolean = true
-) extends InputPartition
+)
+
+/** One Spark input split: slices read in turn, each by its own consumer. */
+case class EventLogInputPartition(slices: Seq[EventLogSlice], read: EventLogRead) extends InputPartition
+
+/** Packs slices into input splits with the policy Spark's file scan uses for
+  * small files (`FilePartition.maxSplitBytes` / `getFilePartitions`). A scan
+  * then pays per-task cost (task deserialization, a sink's writer open and
+  * commit) about once per core, not once per topic partition, and a
+  * many-core session keeps one split per slice.
+  */
+object EventLogSplits {
+
+  /** Pure policy: a slice costs its estimated bytes plus `openCost`; the
+    * split cap is `min(maxPartitionBytes, max(openCost, totalCost /
+    * minPartitions))`; slices are packed next-fit-decreasing, and a slice
+    * larger than the cap gets a split of its own.
+    */
+  def pack[A](slices: Seq[(A, Long)], openCost: Long, maxPartitionBytes: Long, minPartitions: Int): Seq[Seq[A]] = {
+    val total = slices.map(_._2 + openCost).sum
+    val cap   = math.min(maxPartitionBytes, math.max(openCost, total / math.max(1, minPartitions)))
+    slices
+      .sortBy(_._2)(Ordering[Long].reverse)
+      .foldLeft(List.empty[(List[A], Long)]) {
+        case ((split, used) :: done, (a, bytes)) if used + bytes <= cap => (a :: split, used + bytes + openCost) :: done
+        case (done, (a, bytes))                                         => (List(a), bytes + openCost) :: done
+      }
+      .reverse
+      .map(_._1.reverse)
+  }
+
+  /** [[pack]] with the active session's file-split settings:
+    * `spark.sql.files.{maxPartitionBytes,openCostInBytes,minPartitionNum}`,
+    * the latter defaulting to the leaf-node default parallelism.
+    */
+  def plan(read: EventLogRead, slices: Seq[(EventLogSlice, Long)]): Array[InputPartition] = {
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = SQLConf.get
+    val minPartitions = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+    )
+    pack(slices, conf.filesOpenCostInBytes, conf.filesMaxPartitionBytes, minPartitions)
+      .map(split => EventLogInputPartition(split, read): InputPartition)
+      .toArray
+  }
+}
 
 object EventLogReaderFactory extends PartitionReaderFactory {
 
@@ -588,147 +664,176 @@ object EventLogReaderFactory extends PartitionReaderFactory {
     rows().filter { case (o, r) => keyOf(r).forall(k => ledger.getOrElse(k, o) == o) }
   }
 
+  /** One reader per split: the decode path (raw bytes, or the configured
+    * extractor) is built once per split, and each slice gets its own
+    * [[SliceConsumer]].
+    */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[EventLogInputPartition]
-    p.extractorClass match {
-      case None => new PartitionReader[InternalRow] {
-        // pruned projection of the raw (partition, offset, value) envelope
-        private val proj: Seq[((Long, Array[Byte])) => Any] = p.requiredCols.map {
-          case "partition" => (_: (Long, Array[Byte])) => p.partition
-          case "offset"    => (cur: (Long, Array[Byte])) => cur._1
-          case "value"     => (cur: (Long, Array[Byte])) => cur._2
-        }
-        // LAZY slice thunk: each call opens a fresh streaming pass over the
-        // file (one line in memory at a time); open handles are tracked
-        // and closed in close(), so reader memory is O(distinct keys) on
-        // the compacted path and O(1) otherwise — never O(slice)
-        private val openSources = scala.collection.mutable.ArrayBuffer.empty[scala.io.Source]
-        private def slice(): Iterator[(Long, Array[Byte])] =
-          EventLogSource
-            .readLogStream(new java.io.File(p.file), openSources += _)
-            .filter { case (o, _) => o > p.start && o <= p.end }
-        // readCompacted on the raw path: the message-key stand-in is a JSON
-        // payload field; an unparseable payload or missing field = unkeyed
-        // (retained), consistent with Pulsar compacting only keyed messages.
-        // LAZY: the validation require below must fire inside next(), when
-        // Spark has already registered this reader for close() — a throw
-        // from the constructor would leak pass 1's open file handle
-        private lazy val it = p.compactKeyField match {
-          case None => slice()
-          case Some(kf) =>
-            val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-            // the raw path has no schema to validate the key field against
-            // at config time (unlike the extractor path), so validate
-            // against DATA: a configured key field matching ZERO messages
-            // in a non-empty slice is overwhelmingly a typo'd field name,
-            // and serving the full log uncompacted on a typo is exactly
-            // the silent-disable failure config-time validation exists to
-            // prevent — fail loud by default. The legitimate zero-keyed
-            // states (backfill of pre-key-field history, all-malformed
-            // slices) opt out via compaction.validateKeyField=false.
-            compactByKey[Array[Byte]](
-              () => slice(),
-              payload =>
-                try {
-                  val n = mapper.readTree(payload)
-                  val v = if (n == null) null else n.get(kf)
-                  if (v == null || v.isNull) None else Some(v.asText())
-                } catch { case scala.util.control.NonFatal(_) => None },
-              onPassOne = (nRows, nKeyed) =>
-                require(
-                  !p.compactKeyValidate || nKeyed > 0 || nRows == 0,
-                  s"readCompacted: ${EventLogSource.CompactionKeyFieldKey} '$kf' matched no message " +
-                    s"in a non-empty slice of partition ${p.partition} ($nRows rows) — likely a " +
-                    s"mistyped field name (raw-path key fields can only be validated against data); " +
-                    s"set ${EventLogSource.CompactionValidateKey}=false if this slice legitimately " +
-                    "predates the key field"
-                )
-            )
-        }
-        private var current: (Long, Array[Byte]) = _
-        override def next(): Boolean = { val has = it.hasNext; if (has) current = it.next(); has }
-        override def get(): InternalRow = InternalRow(proj.map(_(current)): _*)
-        override def close(): Unit = openSources.foreach { s =>
-          try s.close()
-          catch { case scala.util.control.NonFatal(_) => () }
+    val split = partition.asInstanceOf[EventLogInputPartition]
+    val rowsOf = split.read.extractorClass match {
+      case None      => rawRows(split.read)
+      case Some(cls) => extractedRows(cls, split.read)
+    }
+    new EventLogSplitReader(split.slices, rowsOf)
+  }
+
+  /** The raw (partition, offset, value) envelope of a slice, pruned to the
+    * required columns.
+    */
+  private def rawRows(read: EventLogRead): SliceConsumer => Iterator[InternalRow] = {
+    val proj: Seq[(Int, Long, Array[Byte]) => Any] = read.requiredCols.map {
+      case "partition" => (p: Int, _: Long, _: Array[Byte]) => p
+      case "offset"    => (_: Int, o: Long, _: Array[Byte]) => o
+      case "value"     => (_: Int, _: Long, v: Array[Byte]) => v
+    }
+    // readCompacted on the raw path: the message-key stand-in is a JSON
+    // payload field; an unparseable payload or missing field = unkeyed
+    // (retained), consistent with Pulsar compacting only keyed messages.
+    lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def keyOf(kf: String)(payload: Array[Byte]): Option[Any] =
+      try {
+        val n = mapper.readTree(payload)
+        val v = if (n == null) null else n.get(kf)
+        if (v == null || v.isNull) None else Some(v.asText())
+      } catch { case scala.util.control.NonFatal(_) => None }
+    consumer => {
+      val part = consumer.slice.partition
+      val rows = read.compactKeyField match {
+        case None => consumer.lines()
+        case Some(kf) =>
+          // the raw path has no schema to validate the key field against
+          // at config time (unlike the extractor path), so validate
+          // against DATA: a configured key field matching ZERO messages
+          // in a non-empty slice is overwhelmingly a typo'd field name,
+          // and serving the full log uncompacted on a typo is exactly
+          // the silent-disable failure config-time validation exists to
+          // prevent — fail loud by default. The legitimate zero-keyed
+          // states (backfill of pre-key-field history, all-malformed
+          // slices) opt out via compaction.validateKeyField=false.
+          compactByKey[Array[Byte]](
+            () => consumer.lines(),
+            keyOf(kf),
+            onPassOne = (nRows, nKeyed) =>
+              require(
+                !read.compactKeyValidate || nKeyed > 0 || nRows == 0,
+                s"readCompacted: ${EventLogSource.CompactionKeyFieldKey} '$kf' matched no message " +
+                  s"in a non-empty slice of partition $part ($nRows rows) — likely a " +
+                  s"mistyped field name (raw-path key fields can only be validated against data); " +
+                  s"set ${EventLogSource.CompactionValidateKey}=false if this slice legitimately " +
+                  "predates the key field"
+              )
+          )
+      }
+      rows.map { case (o, v) => InternalRow(proj.map(_(part, o, v)): _*) }
+    }
+  }
+
+  /** A slice decoded by the configured extractor (S16), dropping the
+    * messages it rejects (drop-on-malformed) and counting them on the
+    * slice's consumer.
+    */
+  private def extractedRows(cls: String, read: EventLogRead): SliceConsumer => Iterator[InternalRow] = {
+    // one extractor instance per reader, built by name executor-side —
+    // the reference's decoder lifecycle (init once per consumer), and
+    // init'd with the PRUNED field set so the decoder can skip fields
+    // the query never reads (`extractor.init(fieldsToRead)`,
+    // PulsarJSONMessageDecoder.java:57-58)
+    val ext       = RecordExtractor.instantiate(cls)
+    val extFields = ext.schema.fieldNames
+    // the compaction key must decode even when the query prunes it away
+    // (compaction happens before projection, like the broker's)
+    ext.init((read.requiredCols ++ read.compactKeyField).distinct.filter(extFields.contains))
+    val extIndex = extFields.zipWithIndex.toMap
+    // project (envelope ++ extracted) down to the pruned schema, in
+    // Catalyst's requested order (full schema resolved ONCE — schemaFor
+    // instantiates the extractor to read its field list)
+    val fullSchema = EventLogSource.schemaFor(Some(cls))
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(StructType(read.requiredCols.map(fullSchema.apply)))
+    val proj: Seq[(Int, Long, org.apache.spark.sql.Row) => Any] = read.requiredCols.map {
+      case "partition" => (p: Int, _: Long, _: org.apache.spark.sql.Row) => p
+      case "offset"    => (_: Int, off: Long, _: org.apache.spark.sql.Row) => off
+      case name        => (_: Int, _: Long, row: org.apache.spark.sql.Row) => row.get(extIndex(name))
+    }
+    consumer => {
+      // The drop counter RESETS per decode pass: two-pass compaction
+      // decodes the slice twice, and double-counting would misreport the
+      // droppedMessages metric.
+      def decoded(): Iterator[(Long, org.apache.spark.sql.Row)] = {
+        consumer.dropped = 0
+        consumer.lines().flatMap { case (offset, payload) =>
+          ext.extract(payload) match {
+            case Some(row) => Some(offset -> row)
+            case None      => consumer.dropped += 1; None
+          }
         }
       }
-      case Some(cls) => new PartitionReader[InternalRow] {
-        // one extractor instance per reader, built by name executor-side —
-        // the reference's decoder lifecycle (init once per consumer), and
-        // init'd with the PRUNED field set so the decoder can skip fields
-        // the query never reads (`extractor.init(fieldsToRead)`,
-        // PulsarJSONMessageDecoder.java:57-58)
-        private val ext       = RecordExtractor.instantiate(cls)
-        private val extFields = ext.schema.fieldNames
-        // the compaction key must decode even when the query prunes it away
-        // (compaction happens before projection, like the broker's)
-        ext.init((p.requiredCols ++ p.compactKeyField).distinct.filter(extFields.contains))
-        private val extIndex = extFields.zipWithIndex.toMap
-        // project (envelope ++ extracted) down to the pruned schema, in
-        // Catalyst's requested order (full schema resolved ONCE — schemaFor
-        // instantiates the extractor to read its field list)
-        private val fullSchema   = EventLogSource.schemaFor(Some(cls))
-        private val prunedSchema = StructType(p.requiredCols.map(fullSchema.apply))
-        private val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToCatalystConverter(prunedSchema)
-        private val proj: Seq[(Long, org.apache.spark.sql.Row) => Any] = p.requiredCols.map {
-          case "partition" => (_: Long, _: org.apache.spark.sql.Row) => p.partition
-          case "offset"    => (off: Long, _: org.apache.spark.sql.Row) => off
-          case name        => (_: Long, row: org.apache.spark.sql.Row) => row.get(extIndex(name))
-        }
-        private var dropped: Long = 0L
-        // decode (dropping messages the extractor rejects — drop-on-
-        // malformed), then compact on the extracted key field if configured.
-        // The drop counter RESETS per decode pass: two-pass compaction
-        // decodes the slice twice, and double-counting would misreport the
-        // droppedMessages metric.
-        // streaming read (O(1) memory per pass); open handles tracked for
-        // close(), same as the raw path
-        private val openSources = scala.collection.mutable.ArrayBuffer.empty[scala.io.Source]
-        private def decoded(): Iterator[(Long, org.apache.spark.sql.Row)] = {
-          dropped = 0
-          EventLogSource
-            .readLogStream(new java.io.File(p.file), openSources += _)
-            .filter { case (o, _) => o > p.start && o <= p.end }
-            .flatMap { case (offset, payload) =>
-              ext.extract(payload) match {
-                case Some(row) => Some(offset -> row)
-                case None      => dropped += 1; None
-              }
-            }
-        }
-        private lazy val it: Iterator[(Long, org.apache.spark.sql.Row)] =
-          p.compactKeyField match {
-            case None => decoded()
-            case Some(kf) =>
-              val ki = extIndex(kf)
-              compactByKey[org.apache.spark.sql.Row](() => decoded(), row => Option(row.get(ki)))
-          }
-        private var current: InternalRow = _
-        override def next(): Boolean = {
-          val has = it.hasNext
-          if (has) {
-            val (offset, row) = it.next()
-            current = toCatalyst(
-              org.apache.spark.sql.Row.fromSeq(proj.map(_(offset, row)))
-            ).asInstanceOf[InternalRow]
-          }
-          has
-        }
-        override def get(): InternalRow = current
-        override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-          Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
-            override def name(): String = "droppedMessages"
-            override def value(): Long = dropped
-          })
-        override def close(): Unit = openSources.foreach { s =>
-          try s.close()
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
+      val rows = read.compactKeyField match {
+        case None => decoded()
+        case Some(kf) =>
+          val ki = extIndex(kf)
+          compactByKey[org.apache.spark.sql.Row](() => decoded(), row => Option(row.get(ki)))
+      }
+      val part = consumer.slice.partition
+      rows.map { case (offset, row) =>
+        toCatalyst(org.apache.spark.sql.Row.fromSeq(proj.map(_(part, offset, row)))).asInstanceOf[InternalRow]
       }
     }
   }
+}
+
+/** One slice's consumer: its streaming passes over the partition file (one
+  * line in memory at a time), their open handles, and the messages its
+  * decoder dropped. Reader memory stays O(distinct keys) on the compacted
+  * path and O(1) otherwise — never O(slice).
+  */
+private[sources] final class SliceConsumer(val slice: EventLogSlice) {
+  var dropped: Long = 0L
+  private val open = scala.collection.mutable.ArrayBuffer.empty[scala.io.Source]
+  def lines(): Iterator[(Long, Array[Byte])] =
+    EventLogSource.readLogStream(new java.io.File(slice.file), slice.start, slice.end, open += _)
+  def close(): Unit = {
+    open.foreach { s =>
+      try s.close()
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+    open.clear()
+  }
+}
+
+/** Reads one split's slices in turn, each through its own [[SliceConsumer]];
+  * `droppedMessages` sums over the slices read so far.
+  */
+private[sources] final class EventLogSplitReader(
+    slices: Seq[EventLogSlice],
+    rowsOf: SliceConsumer => Iterator[InternalRow]
+) extends PartitionReader[InternalRow] {
+  private val pending                   = slices.iterator
+  private var consumer: SliceConsumer   = _
+  private var rows: Iterator[InternalRow] = Iterator.empty
+  private var droppedBefore             = 0L
+  private var current: InternalRow      = _
+
+  override def next(): Boolean = {
+    while (!rows.hasNext && pending.hasNext) {
+      if (consumer != null) { droppedBefore += consumer.dropped; consumer.close() }
+      // assigned before rowsOf runs: compaction opens its first pass (and
+      // may fail key-field validation) inside rowsOf, which is inside
+      // next(), when Spark has already registered this reader for close()
+      consumer = new SliceConsumer(pending.next())
+      rows = rowsOf(consumer)
+    }
+    val has = rows.hasNext
+    if (has) current = rows.next()
+    has
+  }
+  override def get(): InternalRow = current
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = "droppedMessages"
+      override def value(): Long = droppedBefore + (if (consumer == null) 0L else consumer.dropped)
+    })
+  override def close(): Unit = if (consumer != null) consumer.close()
 }
 
 /** Materializes a per-partition event log from the `events` fixture — the

@@ -9,17 +9,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * micro-batches (the 500-msg BatchReceivePolicy analogue), restart-resume
   * after the last committed offset (seek semantics), and non-dense offsets.
   */
-class EventLogSourceSpec extends AnyFunSuite {
+class EventLogSourceSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
   private lazy val logDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-log").toString
+    val dir = tempDir("graft-log")
     EventLogWriter.materialize(spark, TestSpark.sfDir, dir)
     dir
   }
 
   private def eventsCount: Long = graft.Tables.events(spark, TestSpark.sfDir).count()
+
+  // the input splits a batch scan plans
+  private def plannedSplits(df: org.apache.spark.sql.DataFrame): Seq[EventLogInputPartition] =
+    df.queryExecution.sparkPlan
+      .collect { case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s.inputPartitions }
+      .flatten
+      .map(_.asInstanceOf[EventLogInputPartition])
 
   test("batch scan returns every message across all partitions") {
     val df = spark.read.format(EventLogSource.ShortName).option("path", logDir).load()
@@ -33,7 +40,7 @@ class EventLogSourceSpec extends AnyFunSuite {
     val skewed = Seq(0L, 4L, 8L, 12L)
       .map(id => (id, id, "click", 1.0))
       .toDF("event_id", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-log-skew").toString
+    val dir = tempDir("graft-log-skew")
     EventLogWriter.materializeFrom(skewed, dir)
     val parts = EventLogSource.partitionFiles(dir)
     assert(parts.map(_._1) === Seq(0, 1, 2, 3), "empty partitions must not vanish from discovery")
@@ -49,7 +56,7 @@ class EventLogSourceSpec extends AnyFunSuite {
     import spark.implicits._
     def frame(ids: Seq[Long]) =
       ids.map(id => (id, id, "click", 1.0)).toDF("event_id", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-log-shrink").toString
+    val dir = tempDir("graft-log-shrink")
     // first materialization: 8 partitions, ids 0..7 land one per partition
     EventLogWriter.materializeFrom(frame(0L to 7L), dir, numPartitions = 8)
     assert(EventLogSource.partitionFiles(dir).map(_._1) === (0 to 7))
@@ -118,10 +125,11 @@ class EventLogSourceSpec extends AnyFunSuite {
 
   test("envelope filter pushdown: partition filter skips files, offset filter clamps ranges") {
     val df = spark.read.format(EventLogSource.ShortName).option("path", logDir).load()
-    // partition equality plans ONE input partition (file skip)
+    // partition equality plans ONE slice (file skip); the split count
+    // follows the session's parallelism, not the log's partition count
     val onePart = df.filter(col("partition") === 2)
-    assert(onePart.rdd.getNumPartitions === 1,
-      "partition=2 must plan exactly one reader (other log files skipped)")
+    assert(plannedSplits(onePart).flatMap(_.slices).map(_.partition) === Seq(2),
+      "partition=2 must plan exactly one slice (other log files skipped)")
     val expected = df.collect().count(_.getInt(0) == 2)
     assert(onePart.count() === expected.toLong, "pruning must not change results")
 
@@ -135,7 +143,7 @@ class EventLogSourceSpec extends AnyFunSuite {
 
     // IN-list partition filter
     val two = df.filter(col("partition").isin(0, 3))
-    assert(two.rdd.getNumPartitions === 2)
+    assert(plannedSplits(two).flatMap(_.slices).map(_.partition).sorted === Seq(0, 3))
     assert(two.count() === df.collect().count(r => Set(0, 3)(r.getInt(0))).toLong)
   }
 
@@ -156,23 +164,33 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("dropped-messages custom metric counts extractor rejections per reader") {
-    // partition 1 holds event_ids = 1 (mod 4) — all odd, so every message
-    // is rejected by the odd-dropping extractor
-    val (p1, file) = EventLogSource.partitionFiles(logDir).find(_._1 == 1).get
+    // one split holding all four slices: partition 1 holds event_ids = 1
+    // (mod 4), all odd, so every one of its messages is rejected by the
+    // odd-dropping extractor; the metric must sum over every slice read
+    val files = EventLogSource.partitionFiles(logDir)
+    val cls = "graft.sources.OddDroppingExtractor"
     val reader = EventLogReaderFactory.createReader(
       EventLogInputPartition(
-        p1, file.getAbsolutePath, -1L, Long.MaxValue,
-        Some("graft.sources.OddDroppingExtractor"),
-        EventLogSource.schemaFor(Some("graft.sources.OddDroppingExtractor")).fieldNames.toSeq
+        files.map { case (p, f) => EventLogSlice(p, f.getAbsolutePath, -1L, Long.MaxValue) },
+        EventLogRead(Some(cls), EventLogSource.schemaFor(Some(cls)).fieldNames.toSeq)
       )
     )
     var kept = 0L
     while (reader.next()) kept += 1
-    val total = EventLogSource.readLog(file).size.toLong
+    val total = files.map { case (_, f) => EventLogSource.readLog(f).size.toLong }.sum
     val metric = reader.currentMetricsValues().find(_.name == "droppedMessages").get
-    assert(metric.value === total - kept, "every rejection must be counted")
-    assert(metric.value > 0L, "the odd-dropping extractor must have dropped something")
+    assert(metric.value === total - kept, "every rejection, in every packed slice, must be counted")
+    assert(metric.value >= EventLogSource.readLog(files.find(_._1 == 1).get._2).size.toLong,
+      "all of partition 1 (odd ids only) must be among the drops")
     reader.close()
+  }
+
+  test("at local[4] a 4-partition log plans one split per slice") {
+    assert(spark.sparkContext.defaultParallelism === 4)
+    val df = spark.read.format(EventLogSource.ShortName).option("path", logDir).load()
+    val splits = plannedSplits(df)
+    assert(splits.map(_.slices.size) === Seq(1, 1, 1, 1), s"got ${splits.map(_.slices.map(_.partition))}")
+    assert(df.rdd.getNumPartitions === 4)
   }
 
   test("EventLogPushdown.from: bound conversions and intersection semantics") {
@@ -233,7 +251,7 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("S16 extractor seam: streaming scan decodes through the configured extractor") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ext-stream").toString
+    val dir = tempDir("graft-ext-stream")
     val q = spark.readStream
       .format(EventLogSource.ShortName)
       .option("path", logDir)
@@ -256,7 +274,7 @@ class EventLogSourceSpec extends AnyFunSuite {
   // keyed-producer layout: each user_id routes to exactly one partition, the
   // precondition under which per-partition compaction IS the global view
   private lazy val keyedLogDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-log-keyed").toString
+    val dir = tempDir("graft-log-keyed")
     EventLogWriter.materializeFrom(
       graft.Tables.events(spark, TestSpark.sfDir), dir, numPartitions = 4, routeBy = "user_id")
     dir
@@ -293,6 +311,24 @@ class EventLogSourceSpec extends AnyFunSuite {
       .toSeq
     assert(got === globalLatestPerUser,
       "the source-level compacted view must match the downstream latest-per-key view")
+  }
+
+  test("readCompacted: the keyed-producer log read as one split of 4 slices keeps per-partition compaction") {
+    val cols = Seq("user_id", "event_id", "event_type", "value")
+    val reader = EventLogReaderFactory.createReader(
+      EventLogInputPartition(
+        EventLogSource.partitionFiles(keyedLogDir).map { case (p, f) =>
+          EventLogSlice(p, f.getAbsolutePath, -1L, Long.MaxValue)
+        },
+        EventLogRead(Some("graft.sources.JsonEventExtractor"), cols, compactKeyField = Some("user_id"))
+      )
+    )
+    val got = scala.collection.mutable.ArrayBuffer.empty[String]
+    try while (reader.next()) {
+      val r = reader.get()
+      got += s"[${r.getLong(0)},${r.getLong(1)},${r.getUTF8String(2)},${r.getDouble(3)}]"
+    } finally reader.close()
+    assert(got.sortBy(_.stripPrefix("[").takeWhile(_ != ',').toLong).toSeq === globalLatestPerUser)
   }
 
   test("readCompacted raw path (no extractor): JSON key field drives compaction, latest payload survives") {
@@ -332,7 +368,7 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("readCompacted streaming: a single catch-up batch equals the batch compacted view") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-compact-ckpt").toString
+    val ckpt = tempDir("graft-compact-ckpt")
     val q = spark.readStream
       .format(EventLogSource.ShortName)
       .option("path", keyedLogDir)
@@ -478,8 +514,8 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("streaming drains in admission-bounded micro-batches (maxMsgs)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-src-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-src-ckpt").toString
+    val out = tempDir("graft-src-out")
+    val ckpt = tempDir("graft-src-ckpt")
     val q = spark.readStream
       .format(EventLogSource.ShortName)
       .option("path", logDir)
@@ -500,10 +536,10 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("restart resumes exactly after the last committed offset (seek)") {
-    val dir  = java.nio.file.Files.createTempDirectory("graft-log2").toString
+    val dir  = tempDir("graft-log2")
     EventLogWriter.materialize(spark, TestSpark.sfDir, dir)
-    val out  = java.nio.file.Files.createTempDirectory("graft-out2").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
+    val out  = tempDir("graft-out2")
+    val ckpt = tempDir("graft-ckpt2")
 
     def drain(): Unit = {
       val q = spark.readStream
@@ -562,8 +598,8 @@ class EventLogSourceSpec extends AnyFunSuite {
         StructField("value", DoubleType)
       )
     )
-    val out  = java.nio.file.Files.createTempDirectory("graft-slice-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-slice-ckpt").toString
+    val out  = tempDir("graft-slice-out")
+    val ckpt = tempDir("graft-slice-ckpt")
     val stream = spark.readStream
       .format(EventLogSource.ShortName)
       .option("path", logDir)
@@ -604,8 +640,8 @@ class EventLogSourceSpec extends AnyFunSuite {
       .events(spark, TestSpark.sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
       .limit(100)
-    val jsonDir = java.nio.file.Files.createTempDirectory("graft-json").toString
-    val csvDir  = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val jsonDir = tempDir("graft-json")
+    val csvDir  = tempDir("graft-csv")
     src.write.mode("overwrite").json(jsonDir)
     src.write.mode("overwrite").option("header", "true").csv(csvDir)
     val viaJson = spark.read.json(jsonDir).count()
@@ -614,7 +650,7 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("malformed payloads in the log are dropped, not failed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-log3").toString
+    val dir = tempDir("graft-log3")
     val f = new java.io.PrintWriter(new java.io.File(dir, "partition-0.log"), "UTF-8")
     f.println(s"${OffsetCodec.encode(0, 0)}\t" + """{"event_id": 1, "user_id": 1, "event_type": "a", "value": 1.0}""")
     f.println(s"${OffsetCodec.encode(0, 1)}\tgarbage payload not json")
@@ -633,7 +669,7 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("corrupt log lines (no tab separator / non-numeric offset) are dropped, not thrown") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-log4").toString
+    val dir = tempDir("graft-log4")
     val f = new java.io.PrintWriter(new java.io.File(dir, "partition-0.log"), "UTF-8")
     f.println(s"${OffsetCodec.encode(0, 0)}\tpayload-a")
     f.println("a line with no separator at all")

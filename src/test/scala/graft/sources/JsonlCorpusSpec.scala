@@ -8,13 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixture, drop-on-malformed with measurable losses, sparse records as
   * nulls — the [[JsonDecode]] contract at corpus granularity.
   */
-class JsonlCorpusSpec extends AnyFunSuite {
+class JsonlCorpusSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
   test("documents round-trip parquet -> jsonl -> frame losslessly") {
     val docs = Tables.documents(spark, TestSpark.sfDir)
-    val dir  = java.nio.file.Files.createTempDirectory("graft-jsonl").toString + "/docs"
+    val dir  = tempDir("graft-jsonl") + "/docs"
     JsonlCorpus.write(docs, dir, nFiles = 3)
     val back = JsonlCorpus.read(spark, dir)
     assert(back.schema.fieldNames.toSeq === JsonlCorpus.documentsSchema.fieldNames.toSeq)
@@ -26,7 +26,7 @@ class JsonlCorpusSpec extends AnyFunSuite {
   }
 
   test("malformed lines drop (never fail) and are countable; sparse records keep nulls") {
-    val dir  = java.nio.file.Files.createTempDirectory("graft-jsonl-bad").toString
+    val dir  = tempDir("graft-jsonl-bad")
     val file = java.nio.file.Paths.get(dir, "part-0.json")
     java.nio.file.Files.write(
       file,
@@ -48,7 +48,7 @@ class JsonlCorpusSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: files arrive as micro-batches, drop accounting matches batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-stream").toString
+    val dir = tempDir("graft-jsonl-stream")
     val src = s"$dir/arrival"
     assert(new java.io.File(src).mkdirs())
     def land(name: String, lines: String*): Unit =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-class SinksSpec extends AnyFunSuite {
+class SinksSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -20,7 +20,7 @@ class SinksSpec extends AnyFunSuite {
       .toSeq
 
   test("writePartitioned lays out hive partitions with bounded sorted files") {
-    val out = Files.createTempDirectory("sinks").toString + "/docs"
+    val out = tempDir("sinks") + "/docs"
     val docs = Tables.documents(spark, TestSpark.sfDir)
     Sinks.writePartitioned(docs, out, Seq("lang"), Seq("doc_id"), filesPerPartition = 2)
 
@@ -44,7 +44,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("partition-col filters prune to the matching directory on read-back") {
-    val out = Files.createTempDirectory("sinks").toString + "/docs"
+    val out = tempDir("sinks") + "/docs"
     Sinks.writePartitioned(
       Tables.documents(spark, TestSpark.sfDir),
       out,
@@ -66,7 +66,7 @@ class SinksSpec extends AnyFunSuite {
   test("writeMetricsJson emits parseable JSON even for non-finite metric values") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("sinks-metrics").toString
+    val dir = tempDir("sinks-metrics")
     val schema = StructType(Seq(
       StructField("n", LongType),
       StructField("ratio", DoubleType),
@@ -87,7 +87,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("compact collapses a fragmented directory and round-trips the data") {
-    val base = Files.createTempDirectory("sinks").toString
+    val base = tempDir("sinks")
     val docs = Tables.documents(spark, TestSpark.sfDir)
     // fragment: one file per shuffle partition
     docs.repartition(24).write.parquet(s"$base/frag")
@@ -101,7 +101,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("re-running the write produces the same deterministic file assignment") {
-    val base = Files.createTempDirectory("sinks").toString
+    val base = tempDir("sinks")
     val docs = Tables.documents(spark, TestSpark.sfDir)
     Sinks.writePartitioned(docs, s"$base/a", Seq("lang"), Seq("doc_id"), filesPerPartition = 2)
     Sinks.writePartitioned(docs, s"$base/b", Seq("lang"), Seq("doc_id"), filesPerPartition = 2)
@@ -117,7 +117,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("writeRangeSorted gives every file a disjoint slice of the key") {
-    val out  = Files.createTempDirectory("sinks").toString + "/ranged"
+    val out  = tempDir("sinks") + "/ranged"
     val docs = Tables.documents(spark, TestSpark.sfDir)
     Sinks.writeRangeSorted(docs, out, "doc_id", nFiles = 4)
 
@@ -171,7 +171,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("compact layouts: sortCols gives disjoint per-file key ranges, zorderCols bounds every listed dimension") {
     import spark.implicits._
-    val base = Files.createTempDirectory("sinks").toString
+    val base = tempDir("sinks")
     val grid = (0 until 64).flatMap(x => (0 until 64).map(y => (x.toLong, y.toLong))).toDF("x", "y")
     grid.repartition(24).write.parquet(s"$base/frag") // fragmented source
 
@@ -207,7 +207,7 @@ class SinksSpec extends AnyFunSuite {
     // 128x128 uniform grid; 32 files each way -> 512 rows per file, one row
     // group per file, so parquet footer min/max stats ARE the skipping unit
     val grid = (0 until 128).flatMap(x => (0 until 128).map(y => (x.toLong, y.toLong))).toDF("x", "y")
-    val base = Files.createTempDirectory("sinks").toString
+    val base = tempDir("sinks")
     Sinks.writeZOrdered(grid, s"$base/z", col("x"), col("y"), nFiles = 32, bits = 7)
     grid.repartition(32).write.parquet(s"$base/shuffled") // same file count, no layout
 
@@ -240,7 +240,7 @@ class SinksSpec extends AnyFunSuite {
     import spark.implicits._
     // a uniform 64x64 grid: every (x, y) cell once
     val grid = (0 until 64).flatMap(x => (0 until 64).map(y => (x.toLong, y.toLong))).toDF("x", "y")
-    val base = Files.createTempDirectory("sinks").toString
+    val base = tempDir("sinks")
 
     Sinks.writeZOrdered(grid, s"$base/z", col("x"), col("y"), nFiles = 16, bits = 6)
     Sinks.writeRangeSorted(grid, s"$base/x", "x", nFiles = 16)

@@ -13,7 +13,7 @@ case class Ev(ts: Timestamp, event_type: String, user_id: Long, value: Double)
   * dedup, and restart-from-checkpoint (the Spark translation of the
   * reference's seek/contiguity semantics, SURVEY §5.4).
   */
-class StreamingPipelinesSpec extends AnyFunSuite {
+class StreamingPipelinesSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -786,9 +786,9 @@ class StreamingPipelinesSpec extends AnyFunSuite {
     // mid-funnel completes correctly in a NEW query instance restarted
     // from the same checkpoint (state-store round-trip of the encoder).
     import spark.implicits._
-    val inDir  = java.nio.file.Files.createTempDirectory("graft-funnel-in").toString
-    val ckpt   = java.nio.file.Files.createTempDirectory("graft-funnel-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-funnel-out").toString
+    val inDir  = tempDir("graft-funnel-in")
+    val ckpt   = tempDir("graft-funnel-ckpt")
+    val outDir = tempDir("graft-funnel-out")
 
     def runOnce(): Unit = {
       val stream = spark.readStream
@@ -838,8 +838,8 @@ class StreamingPipelinesSpec extends AnyFunSuite {
   test("idempotent foreachBatch sink: per-batch dirs, replay-safe") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out  = java.nio.file.Files.createTempDirectory("graft-feb-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-feb-ckpt").toString
+    val out  = tempDir("graft-feb-out")
+    val ckpt = tempDir("graft-feb-ckpt")
     val input = MemoryStream[Ev]
     val q = StreamingPipelines
       .idempotentParquetSink(input.toDF(), out, ckpt)
@@ -896,9 +896,9 @@ class StreamingPipelinesSpec extends AnyFunSuite {
     // process exactly the unseen input. MemoryStream state dies with the
     // instance, so this uses the file source — a genuinely recoverable one.
     import spark.implicits._
-    val inDir  = java.nio.file.Files.createTempDirectory("graft-in").toString
-    val ckpt   = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-out").toString
+    val inDir  = tempDir("graft-in")
+    val ckpt   = tempDir("graft-ckpt")
+    val outDir = tempDir("graft-out")
 
     def runOnce(): Unit = {
       val stream = spark.readStream
@@ -934,9 +934,9 @@ class StreamingPipelinesSpec extends AnyFunSuite {
     // stop. Lost state would read 20 (batch 2 alone); no dedupe would read
     // 40. MemoryStream state dies with the instance → file source.
     import spark.implicits._
-    val inDir  = java.nio.file.Files.createTempDirectory("graft-kmv-in").toString
-    val ckpt   = java.nio.file.Files.createTempDirectory("graft-kmv-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-kmv-out").toString
+    val inDir  = tempDir("graft-kmv-in")
+    val ckpt   = tempDir("graft-kmv-ckpt")
+    val outDir = tempDir("graft-kmv-out")
 
     def runOnce(): Unit = {
       val stream = spark.readStream
@@ -978,9 +978,9 @@ class StreamingPipelinesSpec extends AnyFunSuite {
     // FRESH query instance — the bridging step only exists if the
     // flatMapGroupsWithState state store recovered from the checkpoint.
     import spark.implicits._
-    val inDir  = java.nio.file.Files.createTempDirectory("graft-trans-in").toString
-    val ckpt   = java.nio.file.Files.createTempDirectory("graft-trans-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-trans-out").toString
+    val inDir  = tempDir("graft-trans-in")
+    val ckpt   = tempDir("graft-trans-ckpt")
+    val outDir = tempDir("graft-trans-out")
 
     def runOnce(): Unit = {
       val stream = spark.readStream
@@ -1018,9 +1018,9 @@ class StreamingPipelinesSpec extends AnyFunSuite {
     // event must displace rank 3 of a leaderboard checkpointed by run 1.
     // Lost state would leave user 14 alone in the window.
     import spark.implicits._
-    val inDir  = java.nio.file.Files.createTempDirectory("graft-topk-in").toString
-    val ckpt   = java.nio.file.Files.createTempDirectory("graft-topk-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-topk-out").toString
+    val inDir  = tempDir("graft-topk-in")
+    val ckpt   = tempDir("graft-topk-ckpt")
+    val outDir = tempDir("graft-topk-out")
 
     def runOnce(): Unit = {
       val stream = spark.readStream
