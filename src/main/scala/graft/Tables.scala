@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Fixture loaders + session construction shared by Verify / Bench / tests.
   *
   * All query entry points receive `(spark, sfDir)` and load parquet through
@@ -11,8 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Confs every graft session needs. Applied both at builder time (Verify /
-    * Bench / tests) and defensively at runtime (all are dynamic SQLConfs).
+  /** Confs every graft session needs. Applied at builder time (Verify /
+    * Bench / tests) and, the SQL ones, defensively at runtime.
     *
     * - `nanosAsLong`: some generations of the `events` fixture store `ts`
     *   as parquet TIMESTAMP(NANOS), which Spark's vectorized reader rejects
@@ -21,19 +23,38 @@ object Tables {
     *   micros — [[events]] adapts to whichever type the scan surfaces.
     * - AQE on: at 100 TB, runtime coalescing / skew-join splitting matter
     *   far more than any static tuning we could do here.
+    * - `fs.file.impl` / `fs.AbstractFileSystem.file.impl`: the `file`
+    *   scheme through [[graft.fs.NioLocalFileSystem]] / [[graft.fs.NioLocalFs]].
+    *   Without `libhadoop`, stock Hadoop forks `chmod` for every create and
+    *   mkdir that carries a permission and `readlink` for every link check
+    *   (FileContext's rename makes two): dozens of forks per streaming
+    *   micro-batch across the checkpoint logs and the sink commit. These
+    *   take effect when the SparkContext starts, so [[applyConfs]] skips
+    *   them. Hadoop caches one `file` FileSystem per user for the JVM: one
+    *   created from a conf without this key before the session starts
+    *   stays stock (`LocalFsSpec` checks the test session).
     */
   val sessionConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.session.timeZone" -> "UTC"
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.NioLocalFs].getName
   )
 
+  /** Re-applies the SQL confs of [[sessionConfs]] on every [[read]], for a
+    * session not built by [[localSession]]. `spark.hadoop.*` keys are left
+    * out: they act only at SparkContext start, and set here they would be
+    * copied into every query's Hadoop conf.
+    */
   def applyConfs(spark: SparkSession): Unit =
     sessionConfs.foreach { case (k, v) =>
-      try spark.conf.set(k, v)
-      catch { case _: Throwable => () }
+      if (!k.startsWith("spark.hadoop.")) {
+        try spark.conf.set(k, v)
+        catch { case NonFatal(_) => () }
+      }
     }
 
   /** Build a local session with graft confs. `cpus` also sizes

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * conventional 0.2 actionable line; an all-short batch (every doc in
   * bucket 0) must blow far past it.
   */
-class DriftMonitorSpec extends AnyFunSuite {
+class DriftMonitorSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -26,7 +26,7 @@ class DriftMonitorSpec extends AnyFunSuite {
     val inDist    = docs.limit(200).collect().map(r => Doc(r.getLong(0), r.getString(1)))
     val collapsed = (0 until 150).map(i => Doc(500000L + i, "tiny doc " + i))
 
-    val dir   = java.nio.file.Files.createTempDirectory("drift-mon").toString
+    val dir   = tempDir("drift-mon")
     val input = MemoryStream[Doc]
     val q = StreamingPipelines.driftMonitor(
       input.toDF(), ref, s"$dir/out", s"$dir/ckpt", bucket = bucket)

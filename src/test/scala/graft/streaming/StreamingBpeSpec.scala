@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.operators.Bpe
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming BPE retraining: per-batch additive frequency partials, merge
@@ -11,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * — the retrain-equals-batch discipline of the IVF and PageRank twins,
   * applied to the tokenizer artifact.
   */
-class StreamingBpeSpec extends AnyFunSuite {
+class StreamingBpeSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
   test("streamed retrain == batch trainer on the union corpus, bit for bit, snapshots versioned") {
-    val dir     = Files.createTempDirectory("streaming-bpe").toString
+    val dir     = tempDir("streaming-bpe")
     val landing = s"$dir/landing"
     val bpe     = s"$dir/bpe"
     import spark.implicits._
@@ -84,7 +83,7 @@ class StreamingBpeSpec extends AnyFunSuite {
     // ...and the duplication spectrum folds from the same store — the
     // streamed 4 rows equal the batch q_text_dup_spectrum on the union
     val streamedSp = StreamingBpe.dupSpectrum(spark, bpe).collect().map(_.toString).sorted
-    val tmpUnion   = Files.createTempDirectory("dupspec-union").toString
+    val tmpUnion   = tempDir("dupspec-union")
     docs.toSeq.toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .write.mode("overwrite").parquet(s"$tmpUnion/documents.parquet")
@@ -96,7 +95,7 @@ class StreamingBpeSpec extends AnyFunSuite {
   }
 
   test("restart continuity: a re-started stream resumes the version chain and stays batch-identical") {
-    val dir     = Files.createTempDirectory("streaming-bpe-restart").toString
+    val dir     = tempDir("streaming-bpe-restart")
     val landing = s"$dir/landing"
     val bpe     = s"$dir/bpe"
     import spark.implicits._
@@ -137,7 +136,7 @@ class StreamingBpeSpec extends AnyFunSuite {
       StreamingBpe.unigramVocab(spark, bpe).collect().map(_.toString).sorted ===
         graft.operators.Unigram.trainUnigram(union).collect().map(_.toString).sorted,
       "post-restart unigram vocab equals the batch build on the union")
-    val tmpUnion = Files.createTempDirectory("dupspec-union-restart").toString
+    val tmpUnion = tempDir("dupspec-union-restart")
     union
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .write.mode("overwrite").parquet(s"$tmpUnion/documents.parquet")

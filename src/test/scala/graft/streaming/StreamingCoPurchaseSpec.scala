@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.operators.Graph
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * flip, and both published tables are BIT-IDENTICAL to the batch builders
   * on the union corpus — the retrain-equals-batch-build discipline.
   */
-class StreamingCoPurchaseSpec extends AnyFunSuite {
+class StreamingCoPurchaseSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
   test("streamed fold == batch weighted builds on the union baskets, bit for bit, retain window slides") {
-    val dir     = Files.createTempDirectory("streaming-copurchase").toString
+    val dir     = tempDir("streaming-copurchase")
     val landing = s"$dir/landing"
     val co      = s"$dir/co"
 
@@ -74,7 +73,7 @@ class StreamingCoPurchaseSpec extends AnyFunSuite {
   }
 
   test("restart continuity: a new query instance resumes from the checkpoint and converges to the same tables") {
-    val dir     = Files.createTempDirectory("streaming-copurchase-restart").toString
+    val dir     = tempDir("streaming-copurchase-restart")
     val landing = s"$dir/landing"
     val co      = s"$dir/co"
     val all = Graph

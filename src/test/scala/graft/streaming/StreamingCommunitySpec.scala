@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.operators.Graph
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * union corpus — integer label loops and exact-rational readouts, so
   * equality is exact, with restart continuity.
   */
-class StreamingCommunitySpec extends AnyFunSuite {
+class StreamingCommunitySpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -21,7 +20,7 @@ class StreamingCommunitySpec extends AnyFunSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   test("streamed fold == batch census/modularity/conductance on the union baskets, retain window slides") {
-    val dir     = Files.createTempDirectory("streaming-community").toString
+    val dir     = tempDir("streaming-community")
     val landing = s"$dir/landing"
     val comm    = s"$dir/comm"
     val seeds   = Graph.mfgrSeeds(spark, TestSpark.sfDir)
@@ -78,7 +77,7 @@ class StreamingCommunitySpec extends AnyFunSuite {
   }
 
   test("restart continuity: a new query instance resumes from the checkpoint and converges to the same tables") {
-    val dir     = Files.createTempDirectory("streaming-community-restart").toString
+    val dir     = tempDir("streaming-community-restart")
     val landing = s"$dir/landing"
     val comm    = s"$dir/comm"
     val seeds   = Graph.mfgrSeeds(spark, TestSpark.sfDir)

@@ -1,14 +1,13 @@
 package graft.streaming
 
 import graft.TestSpark
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming DBSCAN: the per-batch blocked pair fold republishes a census
   * bit-identical to the batch `q_embed_dbscan` on the union of landed
   * vectors, across folds and a restart, with per-fold accounting.
   */
-class StreamingDbscanSpec extends AnyFunSuite {
+class StreamingDbscanSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -22,7 +21,7 @@ class StreamingDbscanSpec extends AnyFunSuite {
         union))
 
   test("streamed census == batch q_embed_dbscan on the union, across folds and a restart") {
-    val dir     = Files.createTempDirectory("streaming-dbscan").toString
+    val dir     = tempDir("streaming-dbscan")
     val landing = s"$dir/landing"
     val store   = s"$dir/dbscan"
     val emb = graft.Tables
@@ -81,7 +80,7 @@ class StreamingDbscanSpec extends AnyFunSuite {
   }
 
   test("re-delivered vec_ids across batches are dropped, counted, and leave the census exact") {
-    val dir     = Files.createTempDirectory("streaming-dbscan-redeliver").toString
+    val dir     = tempDir("streaming-dbscan-redeliver")
     val landing = s"$dir/landing"
     val store   = s"$dir/dbscan"
     val emb = graft.Tables

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.{Tables, TestSpark}
 import graft.pipelines.CorpusPipeline
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * documents, across folds, a restart, re-deliveries, and the foldEvery
   * cadence.
   */
-class StreamingFunnelSpec extends AnyFunSuite {
+class StreamingFunnelSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -51,7 +50,7 @@ class StreamingFunnelSpec extends AnyFunSuite {
   }
 
   test("streamed census + ledger == the batch funnel bodies on the union, across folds, restart, re-delivery") {
-    val dir     = Files.createTempDirectory("streaming-funnel").toString
+    val dir     = tempDir("streaming-funnel")
     val landing = s"$dir/landing"
     val store   = s"$dir/funnel"
     val all     = corpus
@@ -103,7 +102,7 @@ class StreamingFunnelSpec extends AnyFunSuite {
   }
 
   test("foldEvery cadence: per-batch landing and additive partials, derivation at every Nth batch") {
-    val dir     = Files.createTempDirectory("streaming-funnel-cadence").toString
+    val dir     = tempDir("streaming-funnel-cadence")
     val landing = s"$dir/landing"
     val store   = s"$dir/funnel"
     val all     = corpus

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.operators.Graph
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * published scores are BIT-IDENTICAL to the batch build on the union
   * corpus — the retrain-equals-batch-build discipline the IVF twin pins.
   */
-class StreamingGraphSpec extends AnyFunSuite {
+class StreamingGraphSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
   test("streamed fold == batch build on the union corpus, bit for bit, with idempotent batch dirs") {
-    val dir     = Files.createTempDirectory("streaming-graph").toString
+    val dir     = tempDir("streaming-graph")
     val landing = s"$dir/landing"
     val graph   = s"$dir/graph"
 
@@ -97,7 +96,7 @@ class StreamingGraphSpec extends AnyFunSuite {
   }
 
   test("trust() on a SEEDLESS stream fails with a clear not-configured error, not a parquet path error") {
-    val dir     = Files.createTempDirectory("streaming-graph-seedless").toString
+    val dir     = tempDir("streaming-graph-seedless")
     val landing = s"$dir/landing"
     val graph   = s"$dir/graph"
     val all = Graph
@@ -118,7 +117,7 @@ class StreamingGraphSpec extends AnyFunSuite {
   }
 
   test("restart continuity: a new query instance resumes from the checkpoint and converges to the same table") {
-    val dir     = Files.createTempDirectory("streaming-graph-restart").toString
+    val dir     = tempDir("streaming-graph-restart")
     val landing = s"$dir/landing"
     val graph   = s"$dir/graph"
     val all = Graph

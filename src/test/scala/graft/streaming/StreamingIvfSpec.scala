@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.{Tables, TestSpark}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * per micro-batch, probes pruned to the query's cluster, and a re-train
   * that converges to the from-scratch batch build bit-for-bit.
   */
-class StreamingIvfSpec extends AnyFunSuite {
+class StreamingIvfSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
   test("ingest assigns arrivals to live centroids, probes prune to one cluster, retrain == batch build exactly") {
-    val dir = Files.createTempDirectory("streaming-ivf").toString
+    val dir = tempDir("streaming-ivf")
     val emb = Tables.embeddings(spark, TestSpark.sfDir).select("vec_id", "embedding", "label")
     val n   = emb.count()
 
@@ -96,7 +95,7 @@ class StreamingIvfSpec extends AnyFunSuite {
   }
 
   test("deletes: tombstones mask probes immediately, retrain compacts to a fresh build excluding them") {
-    val dir = Files.createTempDirectory("streaming-ivf-del").toString
+    val dir = tempDir("streaming-ivf-del")
     val emb = Tables.embeddings(spark, TestSpark.sfDir).select("vec_id", "embedding", "label")
     StreamingIvf.buildIndex(emb.filter(col("vec_id") < 250), s"$dir/index")
     val landing = s"$dir/landing"
@@ -161,7 +160,7 @@ class StreamingIvfSpec extends AnyFunSuite {
   }
 
   test("retrain fence: a delete racing the compaction fails loudly; a crashed fence heals") {
-    val dir = Files.createTempDirectory("streaming-ivf-fence").toString
+    val dir = tempDir("streaming-ivf-fence")
     val emb = Tables.embeddings(spark, TestSpark.sfDir).select("vec_id", "embedding", "label")
     StreamingIvf.buildIndex(emb, s"$dir/index")
     import spark.implicits._

@@ -1,14 +1,13 @@
 package graft.streaming
 
 import graft.TestSpark
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming NB retrain: the per-batch additive frequency fold publishes
   * a model bit-identical to the batch trainer on the union of landed
   * labeled docs, across folds and a restart.
   */
-class StreamingNbSpec extends AnyFunSuite {
+class StreamingNbSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -16,7 +15,7 @@ class StreamingNbSpec extends AnyFunSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   test("streamed model == batch trainer on the union, across folds and a restart") {
-    val dir     = Files.createTempDirectory("streaming-nb").toString
+    val dir     = tempDir("streaming-nb")
     val landing = s"$dir/landing"
     val nb      = s"$dir/nb"
     import org.apache.spark.sql.functions.col

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.{Tables, TestSpark}
 import graft.operators.{Bpe, PackSequences}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the non-additivity case the re-derive argument rests on (an arrival
   * shifts every later start position in its lang stream).
   */
-class StreamingPackSpec extends AnyFunSuite {
+class StreamingPackSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -40,7 +39,7 @@ class StreamingPackSpec extends AnyFunSuite {
     rows(PackSequences.censusFrame(docs, merges))
 
   test("streamed census == the batch packing body on the union, across folds, restart, re-delivery") {
-    val dir     = Files.createTempDirectory("streaming-pack").toString
+    val dir     = tempDir("streaming-pack")
     val landing = s"$dir/landing"
     val store   = s"$dir/pack"
     val all     = corpus
@@ -83,7 +82,7 @@ class StreamingPackSpec extends AnyFunSuite {
   }
 
   test("foldEvery cadence: per-batch landing, derivation at every Nth batch") {
-    val dir     = Files.createTempDirectory("streaming-pack-cadence").toString
+    val dir     = tempDir("streaming-pack-cadence")
     val landing = s"$dir/landing"
     val store   = s"$dir/pack"
     val all     = corpus

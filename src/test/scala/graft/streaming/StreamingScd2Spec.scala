@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.TestSpark
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming SCD2: per-batch incremental history folds, published table
@@ -9,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * observations, restart continuity, boundary collapse across batch
   * edges, and the fail-fast ordering contract.
   */
-class StreamingScd2Spec extends AnyFunSuite {
+class StreamingScd2Spec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -38,7 +37,7 @@ class StreamingScd2Spec extends AnyFunSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   test("streamed history == batch scd2History on the union, across folds and a restart") {
-    val dir     = Files.createTempDirectory("streaming-scd2").toString
+    val dir     = tempDir("streaming-scd2")
     val landing = s"$dir/landing"
     val scd     = s"$dir/scd"
     import spark.implicits._
@@ -83,7 +82,7 @@ class StreamingScd2Spec extends AnyFunSuite {
   }
 
   test("boundary collapse: a cross-batch no-change observation extends the open version") {
-    val dir     = Files.createTempDirectory("streaming-scd2-boundary").toString
+    val dir     = tempDir("streaming-scd2-boundary")
     val landing = s"$dir/landing"
     val scd     = s"$dir/scd"
     import spark.implicits._
@@ -116,7 +115,7 @@ class StreamingScd2Spec extends AnyFunSuite {
       "UTF-8")
 
   test("late-data recovery: a late batch re-derives only the affected keys and stays batch-identical") {
-    val dir     = Files.createTempDirectory("streaming-scd2-late").toString
+    val dir     = tempDir("streaming-scd2-late")
     val landing = s"$dir/landing"
     val scd     = s"$dir/scd"
     import spark.implicits._
@@ -153,7 +152,7 @@ class StreamingScd2Spec extends AnyFunSuite {
   }
 
   test("replay safety: re-executing a published batch after a lost checkpoint commit is a no-op") {
-    val dir     = Files.createTempDirectory("streaming-scd2-replay").toString
+    val dir     = tempDir("streaming-scd2-replay")
     val landing = s"$dir/landing"
     val scd     = s"$dir/scd"
     import spark.implicits._
@@ -187,7 +186,7 @@ class StreamingScd2Spec extends AnyFunSuite {
   }
 
   test("generic schema: a (device_id, seen, seq, state) stream runs the same fold") {
-    val dir     = Files.createTempDirectory("streaming-scd2-generic").toString
+    val dir     = tempDir("streaming-scd2-generic")
     val landing = s"$dir/landing"
     val scd     = s"$dir/scd"
     import spark.implicits._
@@ -237,7 +236,7 @@ class StreamingScd2Spec extends AnyFunSuite {
     }
     assert(eDup.getMessage.contains("distinct"))
     // the streaming twin validates at ingest() time, before any batch lands
-    val dir = Files.createTempDirectory("scd2-validate").toString
+    val dir = tempDir("scd2-validate")
     intercept[IllegalArgumentException] {
       StreamingScd2.ingest(spark, s"$dir/landing", s"$dir/scd", s"$dir/ckpt",
         schemaDdl = "k STRING, t TIMESTAMP, i BIGINT, version STRING",

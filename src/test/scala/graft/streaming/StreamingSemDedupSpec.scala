@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.operators.IvfSimilarity
-import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the batch q_dedup_semantic_cc bodies on the union, restart
   * continuity, enforced exactly-once landing.
   */
-class StreamingSemDedupSpec extends AnyFunSuite {
+class StreamingSemDedupSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -30,7 +29,7 @@ class StreamingSemDedupSpec extends AnyFunSuite {
   }
 
   test("streamed census + drop set == batch semanticCcStats/DropIds on the union, across folds, restart, re-delivery") {
-    val dir     = Files.createTempDirectory("streaming-semdedup").toString
+    val dir     = tempDir("streaming-semdedup")
     val landing = s"$dir/landing"
     val store   = s"$dir/sem"
     val emb = graft.Tables
@@ -81,7 +80,7 @@ class StreamingSemDedupSpec extends AnyFunSuite {
   }
 
   test("foldEvery cadence: landing is per-batch, the derivation flips only at every Nth batch") {
-    val dir     = Files.createTempDirectory("streaming-semdedup-cadence").toString
+    val dir     = tempDir("streaming-semdedup-cadence")
     val landing = s"$dir/landing"
     val store   = s"$dir/sem"
     val emb = graft.Tables

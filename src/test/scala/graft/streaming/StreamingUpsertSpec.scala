@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.{QueryDef, SparkEntry, Tables, TestSpark}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the batch MERGE (`q_merge_upsert`) on the union update set — the
   * retrain-equals-batch-build discipline applied to a dimension table.
   */
-class StreamingUpsertSpec extends AnyFunSuite {
+class StreamingUpsertSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -45,7 +44,7 @@ class StreamingUpsertSpec extends AnyFunSuite {
       .toSeq
 
   test("streamed dimension == the batch MERGE on the union updates; later batches supersede; retain window slides") {
-    val dir     = Files.createTempDirectory("streaming-upsert").toString
+    val dir     = tempDir("streaming-upsert")
     val landing = s"$dir/landing"
     val baseDir = s"$dir/base"
     val dimDir  = s"$dir/dim"
@@ -130,7 +129,7 @@ class StreamingUpsertSpec extends AnyFunSuite {
   }
 
   test("restart continuity: a new query instance resumes from the checkpoint, no replay and no gap") {
-    val dir     = Files.createTempDirectory("streaming-upsert-restart").toString
+    val dir     = tempDir("streaming-upsert-restart")
     val landing = s"$dir/landing"
     val baseDir = s"$dir/base"
     val dimDir  = s"$dir/dim"
@@ -171,7 +170,7 @@ class StreamingUpsertSpec extends AnyFunSuite {
   }
 
   test("generic schema: a (sku, qty, note) stream runs the same fold") {
-    val dir     = Files.createTempDirectory("streaming-upsert-generic").toString
+    val dir     = tempDir("streaming-upsert-generic")
     val landing = s"$dir/landing"
     val baseDir = s"$dir/base"
     val dimDir  = s"$dir/dim"
