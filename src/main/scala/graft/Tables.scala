@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition}
 
 import scala.util.control.NonFatal
 
@@ -107,38 +108,43 @@ object Tables {
     dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" +
       Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(dir))
 
-  /** Rebalance a small pre-explode frame across the cluster before a
-    * compute-heavy fan-out stage (shingle/token/component explode feeding
-    * hashing or decimal aggregation).
-    *
-    * Parquet scan parallelism is bounded by row-group count; the fixtures
-    * are single-row-group files, so without this every post-scan pipeline
-    * runs as ONE task (measured: the whole dedup/IVF family serialized on
-    * one core). That reasoning INVERTS at corpus scale: a 100 TB input's
-    * scan already yields thousands of splits, and an unconditional
-    * repartition would shuffle the whole corpus (text column included)
-    * for nothing. So the behavior is mode-gated via
-    * `spark.graft.fanout.mode`:
-    *   - "force": always repartition — the local/fixture default
-    *     (single-JVM master), zero extra planning cost.
-    *   - "auto":  repartition only when the physical scan is starved
-    *     (fewer partitions than defaultParallelism) — the cluster
-    *     default; costs one physical-plan pass to inspect.
-    *   - "off":   no-op, for deployments that pre-size their scans.
+  /** Spread a starved frame over `defaultParallelism` tasks with one
+    * round-robin `repartition`, ahead of a compute-heavy stage (shingle,
+    * token or component explode feeding hashing or decimal aggregation).
+    * Parquet scan parallelism is bounded by row-group count and the
+    * fixtures are single-row-group files, so without this every post-scan
+    * pipeline runs as ONE task. The corpus tables come spread already
+    * ([[spreadTables]]). The rule reads only the session and the plan:
+    *   - identity at `defaultParallelism` 1: `repartition(1)` still plans
+    *     an `Exchange SinglePartition`, a shuffle for nothing;
+    *   - identity on a narrow view (projections, filters) of a round-robin
+    *     repartition to at least `defaultParallelism` partitions — read
+    *     from the logical plan, since `df.rdd.getNumPartitions` runs a
+    *     Spark job on a frame with an exchange;
+    *   - otherwise spread on a local master, and on a cluster only a
+    *     starved input (fewer partitions than `defaultParallelism`): a
+    *     100 TB scan already yields thousands of splits, and repartitioning
+    *     it would shuffle the whole corpus, text column included.
     * Round-robin repartition local-sorts for retry determinism
     * (SPARK-23207), so plans stay correct under stage recomputation.
     */
   def fanout(df: DataFrame): DataFrame = {
-    val sp   = df.sparkSession
-    val sc   = sp.sparkContext
-    val mode = sp.conf.get("spark.graft.fanout.mode", if (sc.isLocal) "force" else "auto")
-    mode match {
-      case "off"   => df
-      case "force" => df.repartition(sc.defaultParallelism)
-      case _ =>
-        if (df.rdd.getNumPartitions >= sc.defaultParallelism) df
-        else df.repartition(sc.defaultParallelism)
-    }
+    val sc = df.sparkSession.sparkContext
+    val n  = sc.defaultParallelism
+    if (isSpread(df.queryExecution.analyzed, n) || !spreads(n, sc.isLocal, df.rdd.getNumPartitions)) df
+    else df.repartition(n)
+  }
+
+  // fanout's decision for a frame not spread already; a local master never reads the partition count
+  private[graft] def spreads(parallelism: Int, isLocal: Boolean, inputPartitions: => Int): Boolean =
+    parallelism > 1 && (isLocal || inputPartitions < parallelism)
+
+  @scala.annotation.tailrec
+  private def isSpread(plan: LogicalPlan, parallelism: Int): Boolean = plan match {
+    case Repartition(n, true, _) => n >= parallelism
+    case Project(_, child)       => isSpread(child, parallelism)
+    case Filter(_, child)        => isSpread(child, parallelism)
+    case _                       => false
   }
 
   /** Keyed [[fanout]]: repartition by `keys` into the session's configured
@@ -151,12 +157,12 @@ object Tables {
     * (measured r20: q_unigram_encode ran its whole DP in a single 1.6 s
     * task). Because the downstream aggregation reuses this partitioning,
     * the exchange count is UNCHANGED — this only pins the reducer count
-    * where AQE would have collapsed it. Mode-gated like [[fanout]]
-    * ("off" disables); at cluster data volumes the exchange this replaces
-    * would not have been coalesced anyway, so the plan is identical.
+    * where AQE would have collapsed it. On a local master it always
+    * respreads; at cluster data volumes the exchange this replaces would
+    * not have been coalesced anyway, so the plan is identical.
     *
-    * "auto" (the cluster default) mirrors [[fanout]]'s starvation check:
-    * it only repartitions when the input has fewer partitions than
+    * On a cluster it applies [[fanout]]'s starvation check: it only
+    * repartitions when the input has fewer partitions than
     * defaultParallelism. A well-partitioned cluster-scale input keeps its
     * existing exchange plan untouched — without the check, call sites
     * whose keyed partitioning is NOT reused downstream (a broadcast join
@@ -164,19 +170,11 @@ object Tables {
     * exchange for nothing (r20 ADVICE finding).
     */
   def fanoutBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val sp   = df.sparkSession
-    val mode = sp.conf.get("spark.graft.fanout.mode", if (sp.sparkContext.isLocal) "force" else "auto")
-    def respread = {
-      val n = sp.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      df.repartition(n, keys: _*)
-    }
-    mode match {
-      case "off"   => df
-      case "force" => respread
-      case _ =>
-        if (df.rdd.getNumPartitions >= sp.sparkContext.defaultParallelism) df
-        else respread
-    }
+    val sp = df.sparkSession
+    val sc = sp.sparkContext
+    if (sc.isLocal || df.rdd.getNumPartitions < sc.defaultParallelism)
+      df.repartition(sp.conf.get("spark.sql.shuffle.partitions", "200").toInt, keys: _*)
+    else df
   }
 
   /** Materialize a frame that multiple downstream consumers (or an
@@ -223,17 +221,16 @@ object Tables {
     * absent with it off). The toggle is scoped to the eager pin and
     * restored in a finally; queries never run under it.
     *
-    * Mode-gated like [[fanout]]: "off" skips the repartition (deployments
-    * that pre-size their scans get a plain pin). In durable-artifact mode
-    * callers write parquet instead — the read-back carries no partitioning
-    * and consumers keep their exchange, identical to before.
+    * The keyed repartition is the exchange each consumer would otherwise
+    * plan per query, so it is made at every parallelism. In durable-artifact
+    * mode callers write parquet instead — the read-back carries no
+    * partitioning and consumers keep their exchange.
     */
   private val pinKeyedLock = new Object
 
   def pinKeyed(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val sp   = df.sparkSession
-    val mode = sp.conf.get("spark.graft.fanout.mode", if (sp.sparkContext.isLocal) "force" else "auto")
-    if (mode == "off" || keys.isEmpty) pin(df)
+    val sp = df.sparkSession
+    if (keys.isEmpty) pin(df)
     else {
       val n     = sp.conf.get("spark.sql.shuffle.partitions", "200").toInt
       val keyed = df.repartition(n, keys: _*)
@@ -335,8 +332,17 @@ object Tables {
     // sessions would otherwise retain every dead session (and its resolved
     // relations) for the process lifetime
     readCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    readCache.computeIfAbsent((spark, dir, name), _ => spark.read.parquet(path(dir, name)))
+    readCache.computeIfAbsent((spark, dir, name), _ => {
+      val df = spark.read.parquet(path(dir, name))
+      if (spreadTables(name)) fanout(df) else df
+    })
   }
+
+  /** Tables read [[fanout]]-spread: their consumers explode, hash or score
+    * per row. Column pruning and filter pushdown still move below the
+    * exchange. The star-schema tables feed joins that AQE sizes, and stay bare.
+    */
+  private val spreadTables = Set("documents", "embeddings")
 
   // TPC-H-ish star schema (FIXTURES.md §B)
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")
@@ -347,7 +353,7 @@ object Tables {
   def orders(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "lineitem")
 
-  // LLM-pipeline tables
+  // LLM-pipeline tables, spread (see [[spreadTables]])
   def documents(spark: SparkSession, dir: String): DataFrame  = read(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
 

@@ -180,7 +180,7 @@ object Analytics {
       (s, dir) => {
         val t = col("t")
         Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           // materialize the split once: the lambda references the token
           // array 4x, and split() is expensive enough that CollapseProject
           // keeps the extra Project rather than duplicating it per use
@@ -213,7 +213,7 @@ object Analytics {
       "distinct-n diversity census per source (the distinct-1/distinct-2 metric of generation-quality QA, applied as a corpus-health check: a templated or over-duplicated source shows a LOW distinct-bigram ratio long before doc-level dedup notices): unigram and bigram totals vs distinct counts and their ratios, one pass — both gram orders ride one explode as tagged structs, so the corpus scans once and the shuffle carries (source, ord, gram) keys only",
       (s, dir) =>
         Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(col("source"), tokens(col("text")).as("t"))
           .select(
             col("source"),
@@ -274,7 +274,7 @@ object Analytics {
         // two map-only passes over documents (stats + scoring) — same
         // two-scan budget as q_text_tfidf's n_langs; no aggregated frame is
         // referenced twice, so no lineage duplication trap
-        val docs   = Tables.fanout(Tables.documents(s, dir))
+        val docs   = Tables.documents(s, dir)
         val statAggs = count(lit(1)).as("n_docs") +:
           sum(col("dl")).as("sum_dl") +:
           terms.map(term => sum(when(col(s"tf_$term") > 0, 1L).otherwise(0L)).as(s"df_$term"))
@@ -330,7 +330,7 @@ object Analytics {
         // and n_langs comes from the documents table directly (5 values,
         // no tokenization needed) — same numbers, one token pipeline.
         val tok = Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(col("lang"), explode(tokens(col("text"))).as("word"))
         val tf = tok.groupBy(col("lang"), col("word")).agg(count(lit(1)).as("tf"))
         val nl = Tables.documents(s, dir).agg(countDistinct(col("lang")).as("n_langs"))

@@ -352,7 +352,7 @@ object Bpe {
       s: org.apache.spark.sql.SparkSession,
       dir: String
   ): org.apache.spark.sql.DataFrame = {
-    def build = encodeWithMerges(Tables.fanout(Tables.documents(s, dir)), trainedMerges(s, dir))
+    def build = encodeWithMerges(Tables.documents(s, dir), trainedMerges(s, dir))
     graft.Artifacts.get(s, dir, EncCorpusArtifact)(build)
   }
 
@@ -390,11 +390,8 @@ object Bpe {
       "q_bpe_encode_heldout",
       s"tokenizer APPLY on HELD-OUT data — the first thing a real user does with a tokenizer: train the $Rounds-round merge table on the even-doc_id half of the corpus, then encode the ODD half with that frozen vocab. The held-out corpus's own pair statistics never pick a merge (its argmax could differ from the trained table's — the gate would catch an encoder that re-learns); the apply is the same broadcast merge array + map-only aggregate-fold over the held-out half's distinct texts as q_bpe_encode. Output per held-out doc: token counts before/after and the encode md5. First 500 docs by id",
       (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        encodeReadout(
-          docs.filter(col("doc_id") % 2 === 1),
-          encodeWithMerges(Tables.fanout(docs.filter(col("doc_id") % 2 === 1)), trainedMergesEven(s, dir))
-        )
+        val heldOut = Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
+        encodeReadout(heldOut, encodeWithMerges(heldOut, trainedMergesEven(s, dir)))
       },
       Some {
         val ctes = trainCtesSql(Rounds, "doc_id % 2 = 0") ++ encCtesSql(Rounds, "doc_id % 2 = 1")

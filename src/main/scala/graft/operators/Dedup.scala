@@ -79,6 +79,7 @@ object Dedup {
     * equal h's, so it needs the h's, not the band digests).
     */
   private[graft] def rawSignatures(docs: org.apache.spark.sql.DataFrame) = {
+    // a caller's frame (pipeline or streaming batch): spread unless it is already
     val exploded = graft.Tables
       .fanout(docs)
       .select(col("doc_id"), explode(shingles(col("text"))).as("sh"))
@@ -390,7 +391,7 @@ object Dedup {
     */
   private def simhashFrame(s: org.apache.spark.sql.SparkSession, dir: String) = Artifacts.get(s, dir, SimhashSig) {
     val digits = Tables
-      .fanout(Tables.documents(s, dir))
+      .documents(s, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .select(col("doc_id"), md5(col("w")).as("h"))
       .select(
@@ -601,7 +602,7 @@ object Dedup {
     * ~40-byte shingle text.
     */
   private def shingleFrame(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    Artifacts.get(s, dir, JaccardShingles)(explodedShingles(Tables.fanout(Tables.documents(s, dir))))
+    Artifacts.get(s, dir, JaccardShingles)(explodedShingles(Tables.documents(s, dir)))
 
   /** Per-doc distinct-shingle counts as their own build-once artifact —
     * r20: the Jaccard, containment and calibration queries each re-scanned
@@ -948,7 +949,7 @@ object Dedup {
     * over the previous artifact.
     */
   private[graft] def pgrams13Frame(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Artifacts.get(s, dir, Pgrams13)(pgramsBody(Tables.fanout(Tables.documents(s, dir)), 13))
+    Artifacts.get(s, dir, Pgrams13)(pgramsBody(Tables.documents(s, dir), 13))
 
   /** Duplicate 13-gram window starts as a build-once artifact (shared by
     * the interval-union rewrite and the maximal-run decomposition).
@@ -962,7 +963,7 @@ object Dedup {
     * sliding-window min per call.
     */
   private def winnowSelFrame(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Artifacts.get(s, dir, WinnowSel)(winnowSelected(Tables.fanout(Tables.documents(s, dir)), k = 4, w = 5))
+    Artifacts.get(s, dir, WinnowSel)(winnowSelected(Tables.documents(s, dir), k = 4, w = 5))
 
   /** The distinct per-doc winnow fingerprint set (doc_id, h, nfp) as its
     * own build-once artifact (r21), keyed by h: the matcher re-ran the
@@ -1348,7 +1349,7 @@ object Dedup {
       (s, dir) => {
         val labels = clusterLabels(s, dir)
         val q = TextAnalysis
-          .qualityFrame(Tables.fanout(Tables.documents(s, dir)))
+          .qualityFrame(Tables.documents(s, dir))
           .select(col("doc_id"), col("quality"))
         bestPerCluster(labels, q)
           .select(
@@ -1441,9 +1442,10 @@ object Dedup {
       "q_dedup_fuzzy",
       "edit-distance near-dup pairs on part names, blocked by brand (fuzzy record linkage): candidate pairs come from an equi-join on the block key — O(sum block^2) not O(n^2) — then exact levenshtein <= 2 filters; per-brand census",
       (s, dir) => {
-        // fanout only the probe side: it carries the per-pair levenshtein
-        // work (single-row-group fixture -> 1 task otherwise); the build
-        // side just feeds a broadcast, where a rebalance buys nothing.
+        // fanout only the probe side (`part` is not a spread table): it
+        // carries the per-pair levenshtein work (single-row-group fixture
+        // -> 1 task otherwise); the build side just feeds a broadcast,
+        // where a rebalance buys nothing.
         // r21: the LENGTH BAND rides the join KEY — d <= 2 implies
         // |len(a)-len(b)| <= 2, so blocking on (brand, len div 3) with
         // the build side exploded into its three adjacent buckets is
@@ -1536,7 +1538,7 @@ object Dedup {
       "q_dedup_segments",
       "segment-level dedup WITH document rewrite — the CCNet/ExactSubstr-style sub-document pass the doc-level family can't do: every doc is cut into non-overlapping 8-token segments (map-only slice lambdas), the corpus-wide FIRST occurrence of each distinct segment (ordered by doc_id, seg_idx) survives, later copies are dropped, and each doc is REASSEMBLED from its kept segments in order. Scale shape: the shuffle key is md5(segment) — 32 bytes, never the text; first-occurrence is a groupBy min(struct), not a rank window; rebuild is one collect_list per doc. Output pins the rebuilt text by md5 per doc, so the oracle hash-proves the full cut-dedup-reassemble round trip",
       (s, dir) =>
-        segmentDedup(Tables.fanout(Tables.documents(s, dir)))
+        segmentDedup(Tables.documents(s, dir))
           .select(
             col("doc_id"),
             col("n_segs"),
@@ -1575,7 +1577,7 @@ object Dedup {
       "q_dedup_exact_substr",
       "TRUE exact-substring dedup (Lee et al. 2022): every duplicated >=13-token run is cut from all but its corpus-wide first occurrence — sliding windows, so a copied run STRADDLING q_dedup_segments' fixed 8-token boundaries is caught (spec-pinned). Scale: one window explode, first-occurrence = ONE min(struct) aggregation (map-side partial combine tames boilerplate grams), duplicated-token count = exact interval-union length via per-doc running-max window (no position explode), rewrite via a higher-order filter over each doc's own start list",
       (s, dir) =>
-        exactSubstrFromDup(Tables.fanout(Tables.documents(s, dir)), dupStartsFrame(s, dir))
+        exactSubstrFromDup(Tables.documents(s, dir), dupStartsFrame(s, dir))
           .orderBy(col("doc_id")),
       Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
              |idx AS (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 12, 0))) AS i FROM toks),

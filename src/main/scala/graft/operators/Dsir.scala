@@ -46,7 +46,7 @@ object Dsir {
     // target counts, totals, the weight sum), so it is pinned once
     val tb = Tables.pin(
       Tables
-        .fanout(Tables.documents(s, dir))
+        .documents(s, dir)
         .select(col("doc_id"), col("lang"), explode(TextShared.tokens(col("text"))).as("t"))
         .select(col("doc_id"), col("lang"), bucket(col("t")).as("b"))
     )

@@ -54,7 +54,7 @@ object IvfSimilarity {
     Artifacts.declare("ivf_comp", Artifacts.SessionOnly, pinKeys = Seq("vec_id"))
 
   private def comp(s: SparkSession, dir: String): DataFrame =
-    Artifacts.get(s, dir, CompArtifact)(compFrame(Tables.fanout(Tables.embeddings(s, dir))))
+    Artifacts.get(s, dir, CompArtifact)(compFrame(Tables.embeddings(s, dir)))
 
   /** Frame-generic exploded component view — the shape every k-means /
     * probe stage consumes. Exposed to [[graft.streaming.StreamingIvf]],
@@ -367,7 +367,7 @@ object IvfSimilarity {
     */
   private def semanticCcArtifact(s: SparkSession, dir: String): DataFrame = {
     def build =
-      semanticCcStatsTracked(Tables.fanout(Tables.embeddings(s, dir)), assignments(s, dir), 0.2)
+      semanticCcStatsTracked(Tables.embeddings(s, dir), assignments(s, dir), 0.2)
     Artifacts.getTracked(s, dir, SemCcArtifact)(build)
   }
 
@@ -1106,7 +1106,7 @@ object IvfSimilarity {
       (s, dir) => {
         graft.functions.VectorFunctions.register(s)
         val a2   = assignments(s, dir).select(col("vec_id"), col("cid"))
-        val qf   = Quantize.quantizedFrame(Tables.fanout(Tables.embeddings(s, dir)))
+        val qf   = Quantize.quantizedFrame(Tables.embeddings(s, dir))
         val qcid = a2.filter(col("vec_id") === 0).select(col("cid"))
         val members = a2
           .join(broadcast(qcid), "cid")
@@ -1142,7 +1142,7 @@ object IvfSimilarity {
       "SemDeDup (Abbas et al. 2023): semantic near-dup removal blocked by the trained k-means clusters — within each cluster, a vector is dropped iff a smaller-id member scores cosine >= threshold against it (greedy keep-lowest-id, no transitive closure); per-cluster (n_members, n_dropped) accounting. The IVF assignments artifact does double duty as the dedup blocking key, so the pair cost is sum(cluster^2) with k the scale lever (at 10^9 vectors, k ~ 10^5 keeps clusters ~10^4); threshold 0.2 at the gate for the same reason as q_dedup_embed (the synthetic fixture holds no cos >= 0.85 twins, and 0 drops = 0 drops would hide a broken pair join)",
       (s, dir) =>
         semanticDedupStats(
-          Tables.fanout(Tables.embeddings(s, dir)),
+          Tables.embeddings(s, dir),
           assignments(s, dir),
           threshold = 0.2
         ),

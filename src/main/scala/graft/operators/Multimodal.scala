@@ -376,8 +376,7 @@ object Multimodal {
 
   private def pngTableBody(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables
-      .fanout(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+    Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { rows =>
         rows.map { case (docId, text) =>
@@ -415,8 +414,7 @@ object Multimodal {
 
   private def jpegTableBody(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables
-      .fanout(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+    Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { rows =>
         rows.map { case (docId, text) =>
@@ -496,8 +494,7 @@ object Multimodal {
 
   private def wavTableBody(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables
-      .fanout(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+    Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { rows =>
         rows.map { case (docId, text) =>

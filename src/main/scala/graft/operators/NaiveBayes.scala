@@ -272,7 +272,7 @@ object NaiveBayes {
       s: org.apache.spark.sql.SparkSession,
       dir: String
   ): DataFrame =
-    graft.Artifacts.get(s, dir, ConfArtifact)(scoredCensus(Tables.fanout(Tables.documents(s, dir))))
+    graft.Artifacts.get(s, dir, ConfArtifact)(scoredCensus(Tables.documents(s, dir)))
 
   private def confusionArtifact(
       s: org.apache.spark.sql.SparkSession,
@@ -296,7 +296,7 @@ object NaiveBayes {
   ): DataFrame = {
     def build = modelWeighted(
       Tables
-        .fanout(Tables.documents(s, dir))
+        .documents(s, dir)
         .filter(col("doc_id") % 2 === 0)
         .select(col("lang"), col("text").as("s"), lit(1L).as("w")))._1
     graft.Artifacts.get(s, dir, ModelArtifact)(build)

@@ -74,6 +74,7 @@ object PackSequences {
     * ([[graft.streaming.StreamingPack]]) folds with.
     */
   private[graft] def encCountsFrame(docs: DataFrame, merges: DataFrame): DataFrame =
+    // a caller's frame (streaming batch): spread the encode fold unless it is already
     encCountsFromEnc(docs, Bpe.encodeWithMerges(Tables.fanout(docs), merges))
 
   private def encCountsFromEnc(docs: DataFrame, enc: DataFrame): DataFrame =

@@ -122,7 +122,7 @@ object Quantize {
       "int8 scalar quantization of embeddings (symmetric max-abs, floor(v+0.5) rounding): per-vector scale + code stats — the 3.6x storage/shuffle shrink for vector search",
       (s, dir) =>
         Tables
-          .fanout(Tables.embeddings(s, dir))
+          .embeddings(s, dir)
           .withColumn("scale", expr(scaleSpark))
           .withColumn("qcode", expr(codesSpark))
           .select(
@@ -147,7 +147,7 @@ object Quantize {
     QueryDef(
       "q_sim_quantized_topk",
       "quantized-cosine brute-force top-10 vs a query vector: int8 integer dot/norms, one double division (scales cancel) — exact-cosine's plan shape at a quarter of the scan bytes",
-      (s, dir) => quantizedTopK(Tables.fanout(Tables.embeddings(s, dir)), queryVecId = 0, k = 10),
+      (s, dir) => quantizedTopK(Tables.embeddings(s, dir), queryVecId = 0, k = 10),
       Some(s"""WITH sc AS (
               |  SELECT vec_id, label, embedding, $scaleDuck AS scale FROM embeddings),
               |qc AS (
@@ -165,7 +165,7 @@ object Quantize {
       "two-stage ANN, the production quantized-search pattern: stage 1 scans int8 codes for a quantized top-20 (a quarter of the bytes), stage 2 re-ranks ONLY those 20 with exact float cosine and emits the top-5 — full-precision answers at quantized-scan cost",
       (s, dir) => {
         graft.functions.VectorFunctions.register(s)
-        val emb  = Tables.fanout(Tables.embeddings(s, dir))
+        val emb  = Tables.embeddings(s, dir)
         val cand = quantizedTopK(emb, queryVecId = 0, k = 20).select("vec_id")
         val q    = emb.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
         emb
@@ -202,7 +202,7 @@ object Quantize {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         graft.functions.VectorFunctions.register(s)
-        val emb = Tables.fanout(Tables.embeddings(s, dir))
+        val emb = Tables.embeddings(s, dir)
         val q   = emb.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
         val exact = emb
           .filter(col("vec_id") =!= 0)

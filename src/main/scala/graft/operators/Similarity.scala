@@ -497,7 +497,7 @@ object Similarity {
       dir: String
   ): DataFrame = {
     def build = {
-      val emb = Tables.fanout(Tables.embeddings(s, dir))
+      val emb = Tables.embeddings(s, dir)
       dbscanFromPairsTracked(embedNearDupPairs(emb, threshold = 0.0), emb)
     }
     graft.Artifacts.getTracked(s, dir, DbscanArtifact)(build)
@@ -509,7 +509,7 @@ object Similarity {
       "brute-force cosine top-k vs a query vector (codegen'd CosineSimilarity expression; TakeOrderedAndProject, corpus never shuffles)",
       (s, dir) => {
         VectorFunctions.register(s)
-        val emb = Tables.fanout(Tables.embeddings(s, dir))
+        val emb = Tables.embeddings(s, dir)
         val q   = emb.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
         emb
           .filter(col("vec_id") =!= 0)
@@ -534,7 +534,7 @@ object Similarity {
       "random-hyperplane LSH bucketing: 8 sign bits -> 256 buckets (the ANN scale path); bucket histogram",
       (s, dir) =>
         Tables
-          .fanout(Tables.embeddings(s, dir))
+          .embeddings(s, dir)
           .select(expr(bucketSpark).as("bucket"))
           .groupBy(col("bucket"))
           .agg(count(lit(1)).as("n"))
@@ -545,7 +545,7 @@ object Similarity {
     QueryDef(
       "q_sim_lsh_probe",
       "LSH-bucketed ANN probe: top-5 by cosine among vectors sharing the query's bucket (~1/256 of the corpus scanned)",
-      (s, dir) => lshProbe(Tables.fanout(Tables.embeddings(s, dir)), queryVecId = 0, maxHamming = 0, k = 5),
+      (s, dir) => lshProbe(Tables.embeddings(s, dir), queryVecId = 0, maxHamming = 0, k = 5),
       Some(s"""WITH bk AS (
               |  SELECT vec_id, embedding, $bucketDuck AS bucket FROM embeddings),
               |q AS (SELECT embedding AS q_emb, bucket AS q_bucket FROM bk WHERE vec_id = 0)
@@ -558,7 +558,7 @@ object Similarity {
     QueryDef(
       "q_sim_lsh_probe2",
       "multi-probe LSH (Hamming radius 1): top-5 by cosine across the query's bucket plus its 8 single-bit-flip neighbors (~9/256 scanned) — the LSH recall lever, mirroring IVF nprobe=2",
-      (s, dir) => lshProbe(Tables.fanout(Tables.embeddings(s, dir)), queryVecId = 0, maxHamming = 1, k = 5),
+      (s, dir) => lshProbe(Tables.embeddings(s, dir), queryVecId = 0, maxHamming = 1, k = 5),
       Some(s"""WITH bk AS (
               |  SELECT vec_id, embedding, $bucketDuck AS bucket FROM embeddings),
               |q AS (SELECT embedding AS q_emb, bucket AS q_bucket FROM bk WHERE vec_id = 0)
@@ -571,7 +571,7 @@ object Similarity {
     QueryDef(
       "q_sim_banded_probe",
       "banded-signature LSH ANN probe: 32 sign bits in 4 bands x 8, candidate iff some band matches exactly — pigeonhole guarantees recall to Hamming 3 of the 32-bit signature at ~4/256 of the corpus, where radius-1 flip enumeration scans 9/256 and only covers Hamming 1",
-      (s, dir) => bandedProbe(Tables.fanout(Tables.embeddings(s, dir)), queryVecId = 0, bands = 4, k = 5),
+      (s, dir) => bandedProbe(Tables.embeddings(s, dir), queryVecId = 0, bands = 4, k = 5),
       Some(s"""WITH bk AS (
               |  SELECT vec_id, embedding,
               |    ${bandSigDuck(0)} AS b0, ${bandSigDuck(1)} AS b1,
@@ -588,7 +588,7 @@ object Similarity {
       "q_sim_knn_join",
       "batched k-NN join: top-3 cosine neighbors for EACH of the first 3 query vectors, multi-probe-LSH-blocked, ranked by a mergeable typed top-k aggregate (no ranking window over the candidate pairs)",
       (s, dir) => {
-        val emb = Tables.fanout(Tables.embeddings(s, dir))
+        val emb = Tables.embeddings(s, dir)
         knnJoin(
           emb.filter(col("vec_id") < 3).select(col("vec_id"), col("embedding")),
           emb.filter(col("vec_id") >= 3).select(col("vec_id"), col("embedding")),
@@ -616,7 +616,7 @@ object Similarity {
       "q_sim_knn_join_q8",
       "quantized-scoring twin of q_sim_knn_join: identical multi-probe LSH candidate sets (buckets from the FLOAT embedding on both sides), but candidates score with the fused int8 quantized_cosine — the probe broadcast carries ~4x fewer bytes and the corpus scan reads codes, not floats",
       (s, dir) => {
-        val emb = Tables.fanout(Tables.embeddings(s, dir))
+        val emb = Tables.embeddings(s, dir)
         knnJoin(
           emb.filter(col("vec_id") < 3).select(col("vec_id"), col("embedding")),
           emb.filter(col("vec_id") >= 3).select(col("vec_id"), col("embedding")),
@@ -657,7 +657,7 @@ object Similarity {
       // predicate could hide (round-7 finding #3). 0.2 pushes real pairs
       // through join + score + filter in BOTH engines; the 0.85 semantics
       // are pinned separately by the planted-pair spec.
-      (s, dir) => embedNearDupPairs(Tables.fanout(Tables.embeddings(s, dir)), threshold = 0.2),
+      (s, dir) => embedNearDupPairs(Tables.embeddings(s, dir), threshold = 0.2),
       Some(s"""WITH bk AS (
               |  SELECT vec_id, label, embedding, $bucketDuck AS bucket FROM embeddings)
               |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -671,7 +671,7 @@ object Similarity {
       "q_dedup_embed_banded",
       "banded-signature near-dup pairs: candidates share (label, any of 4 band signatures) — recalls pairs whose 8-bit buckets differ (Hamming <= 3 of 32 guaranteed), still sum(block^2) cost",
       // same 0.2 gate threshold rationale as q_dedup_embed
-      (s, dir) => bandedNearDupPairs(Tables.fanout(Tables.embeddings(s, dir)), threshold = 0.2),
+      (s, dir) => bandedNearDupPairs(Tables.embeddings(s, dir), threshold = 0.2),
       Some(s"""WITH bk AS (
               |  SELECT vec_id, label, embedding,
               |    ${bandSigDuck(0)} AS b0, ${bandSigDuck(1)} AS b1,
@@ -739,7 +739,7 @@ object Similarity {
       (s, dir) => {
         VectorFunctions.register(s)
         Tables
-          .fanout(Tables.embeddings(s, dir))
+          .embeddings(s, dir)
           .withColumn(
             "norm",
             sqrt(expr(
@@ -775,8 +775,8 @@ object Similarity {
         // re-running the component explode + decimal means per call; the
         // per-vector scoring readout still runs per query
         labelCentroidMarginFrom(
-          Tables.fanout(Tables.embeddings(s, dir)),
-          graft.Artifacts.get(s, dir, CentsRowArtifact)(centsRowOf(Tables.fanout(Tables.embeddings(s, dir))))
+          Tables.embeddings(s, dir),
+          graft.Artifacts.get(s, dir, CentsRowArtifact)(centsRowOf(Tables.embeddings(s, dir)))
         ),
       Some(s"""WITH comp AS (
               |  SELECT vec_id, label, i AS d, cast(embedding[i] as double) AS x

@@ -628,7 +628,7 @@ object TextAnalysis {
     (s, dir) =>
       dupSpectrumOver(
         Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(lit(1L).as("w"), tokens(col("text")).as("t"))
       ),
     Some {
@@ -658,7 +658,7 @@ object TextAnalysis {
       "q_text_langid",
       "heuristic language ID: stopword-hit argmax per doc (deterministic tie order), confusion counts vs labeled lang",
       (s, dir) =>
-        langidFrame(Tables.fanout(Tables.documents(s, dir)))
+        langidFrame(Tables.documents(s, dir))
           .groupBy(col("lang"), col("predicted"))
           .agg(count(lit(1)).as("n"))
           .orderBy(col("lang"), col("predicted")),
@@ -685,7 +685,7 @@ object TextAnalysis {
       // bit-identical in both engines, so emitted RAW — rounding a
       // rational double at a decimal half diverges between engines
       (s, dir) =>
-        qualityFrame(Tables.fanout(Tables.documents(s, dir)))
+        qualityFrame(Tables.documents(s, dir))
           .select(
             col("doc_id"),
             col("n_tok"),
@@ -740,7 +740,7 @@ object TextAnalysis {
       "q_text_pmi",
       "PMI collocation mining (Church & Hanks 1990) — the classic phrase-extraction readout ('new york', 'machine learning') a curation pipeline runs before vocabulary decisions: for adjacent token pairs with count >= 5, pointwise mutual information ln(P(ab) / (P(a)P(b))) computed as ONE ln over a single IEEE product/quotient of exactly-converted integer counts (c_ab*N*N / (c_a*c_b*M) — identical expression shape on both engines), ranked on the ROUNDED score (the tfidf convention: raw transcendentals can differ in the last ulp) with (a, b) tiebreak. Corpus stats (total tokens N, total bigrams M) ride one broadcast row; unigram and bigram counts are each one explode + map-side-combinable aggregation. Top-15 collocations",
       (s, dir) => {
-        val docs = Tables.fanout(Tables.documents(s, dir))
+        val docs = Tables.documents(s, dir)
         // r20: unigram counts ride the shared tok_counts artifact and the
         // bigram counts derive from the shared lm_bgdoc artifact (bg =
         // "a b" with space-free tokens, so the split is exact) — the two
@@ -804,7 +804,7 @@ object TextAnalysis {
       "token counting per lang: whitespace tokens + BPE-ish regex segmentation (letters|digits|punct)",
       (s, dir) =>
         Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(
             col("lang"),
             size(tokens(col("text"))).cast("long").as("ws_tokens"),
@@ -882,7 +882,7 @@ object TextAnalysis {
         // non-candidate collapse sentinel below, so an '' token above the
         // 1% threshold would silently vanish while the oracle counted it.
         val toks = Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(explode(tokens(col("text"))).as("tok"))
           .filter(col("tok") =!= "")
         val cand = toks
@@ -931,7 +931,7 @@ object TextAnalysis {
         // the explode), still bit-reproducible in DuckDB
         def buckets(t: Column) = graft.functions.CountMinSketch.bucketsCol(t, depth, width)
         val toks = Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(explode(tokens(col("text"))).as("tok"))
           .filter(col("tok") =!= "")
         val sketch = toks
@@ -1009,7 +1009,7 @@ object TextAnalysis {
     QueryDef(
       "q_text_heaps",
       "Heaps'-law vocabulary-growth fit — the companion corpus-health check to q_text_zipf (V(n) = K*n^beta; natural text beta ~ 0.5-0.8, templated corpora saturate and flatten, junk floods grow toward 1): 10 nested doc_id%10 prefixes (map-only, no global doc sort), vocab-at-step from each token's first step, token counts from a map-side size(split) sum, log-log regr_* fit over the 10-row growth curve",
-      (s, dir) => heapsFit(Tables.fanout(Tables.documents(s, dir))),
+      (s, dir) => heapsFit(Tables.documents(s, dir)),
       Some("""WITH steps AS (
              |  SELECT doc_id % 10 AS m, string_split(text, ' ') AS t FROM documents),
              |firsts AS (
@@ -1083,7 +1083,7 @@ object TextAnalysis {
       "q_text_repetition",
       "repetition-ratio quality filter (boilerplate detector): share of each doc taken by its most frequent token; census of docs above the 0.1 repetition threshold per language — exact integer ratios, no rounding needed",
       (s, dir) => {
-        val perDoc = repetitionFrame(Tables.fanout(Tables.documents(s, dir)))
+        val perDoc = repetitionFrame(Tables.documents(s, dir))
         perDoc
           .groupBy(col("lang"))
           .agg(
@@ -1112,7 +1112,7 @@ object TextAnalysis {
       (s, dir) => {
         val t = tokens(col("text"))
         val perDoc = Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(
             col("lang"),
             size(array_distinct(t)).cast("long").as("nd"),
@@ -1142,7 +1142,7 @@ object TextAnalysis {
       (s, dir) => {
         val t = tokens(col("text"))
         Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .filter(array_contains(t, "query") && array_contains(t, "scan"))
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_hits"), min(col("doc_id")).as("first_doc"))
@@ -1214,7 +1214,7 @@ object TextAnalysis {
       (s, dir) => {
         val b = conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("int")
         val toks = Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(
             col("doc_id"),
             split(col("text"), " ").as("t"),
@@ -1265,7 +1265,7 @@ object TextAnalysis {
   private[graft] def tokCountsTable(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     Artifacts.get(s, dir, TokCountsArtifact) {
       Tables
-        .fanout(Tables.documents(s, dir))
+        .documents(s, dir)
         .select(explode(tokens(col("text"))).as("tok"))
         .groupBy(col("tok"))
         .agg(count(lit(1)).as("c"))
@@ -1275,7 +1275,7 @@ object TextAnalysis {
     * (both consume the same exploded bigram frame).
     */
   private[graft] def lmBgdocTable(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    Artifacts.get(s, dir, LmBgdocArtifact)(lmBgdocOf(Tables.fanout(Tables.documents(s, dir))))
+    Artifacts.get(s, dir, LmBgdocArtifact)(lmBgdocOf(Tables.documents(s, dir)))
 
   // session pin keyed by doc_id (r21): the hot consumer (the lm_score
   // scoring join + groupBy(doc_id, lang)) reads it exchange-free; PMI and
@@ -1296,7 +1296,7 @@ object TextAnalysis {
         graft.functions.BloomFilter.register(s)
         val b = conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("int")
         val toks = Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(
             col("doc_id"),
             split(col("text"), " ").as("t"),
@@ -1399,11 +1399,8 @@ object TextAnalysis {
       "train/test contamination check: test-split docs whose normalized fingerprint also appears in the train split (semi-join on the dedup key — the eval-integrity preflight every LLM pipeline runs)",
       (s, dir) => {
         val b = conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("int")
-        // fanout: the regexp+md5 projection dominates and the fixture is a
-        // single row group — without the rebalance one task fingerprints
-        // the whole corpus
         val fp = Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(
             col("doc_id"),
             when(b < 204, "train").when(b < 230, "val").otherwise("test").as("split"),
@@ -1441,7 +1438,7 @@ object TextAnalysis {
       "PII-pattern census (data-cleaning preflight): per-language counts of docs containing email-like or long-digit-run patterns",
       (s, dir) =>
         Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .groupBy(col("lang"))
           .agg(
             count(lit(1)).as("n_docs"),
@@ -1477,7 +1474,7 @@ object TextAnalysis {
         )
         val (emailPat, phonePat, ipPat) = (EmailPat, PhonePat, IpPat)
         Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .withColumn("seeded", seeded)
           .select(
             col("doc_id"),
@@ -1525,7 +1522,7 @@ object TextAnalysis {
           (acc, x) => acc + x
         )
         Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(
             col("doc_id"),
             size(toks).cast("long").as("n_tok"),
@@ -1584,7 +1581,7 @@ object TextAnalysis {
       (s, dir) => {
         val stats = Artifacts.get(s, dir, MixtureStats) {
           Tables
-            .fanout(Tables.documents(s, dir))
+            .documents(s, dir)
             .groupBy(col("source"))
             .agg(sum(size(split(col("text"), " ")).cast("long")).cast("long").as("n_tokens"))
             .withColumn("w", sqrt(col("n_tokens").cast("double")).cast("decimal(18,12)"))
@@ -1792,7 +1789,7 @@ object TextAnalysis {
         // one double per doc.
         graft.functions.CharEntropy.register(s)
         val perDoc = Tables
-          .fanout(Tables.documents(s, dir))
+          .documents(s, dir)
           .select(col("lang"), expr("char_entropy(text)").as("h"))
         perDoc
           .groupBy(col("lang"))
@@ -1868,7 +1865,7 @@ object TextAnalysis {
       "Gopher-style composite rule filter with per-rule drop accounting (the funnel every production corpus filter reports): token count in [50, 100k], mean token length in [4, 10], type-token ratio >= 0.4, >= 2 stopword hits, top single-token frequency <= 12.5% — thresholds tightened from Gopher's to discriminate on this corpus (defaults in the API keep the published bounds). One wide bigint row: total, per-rule failure counts (a doc can fail several), survivors. Map-only flag computation + a single partial-aggregated count row — no shuffle of doc data at any corpus size",
       (s, dir) =>
         gopherFlags(
-          Tables.fanout(Tables.documents(s, dir)),
+          Tables.documents(s, dir),
           minMeanTokLen = 4.0,
           minTtr = 0.4,
           maxTopTokFrac = 0.125
@@ -1916,7 +1913,7 @@ object TextAnalysis {
       // SHUFFLE where this form's in-doc array_distinct dedups map-side
       // before anything moves — 1.38 s -> 1.75 s, reverted
       (s, dir) =>
-        noveltyScores(Tables.fanout(Tables.documents(s, dir)))
+        noveltyScores(Tables.documents(s, dir))
           .orderBy(col("novel_frac"), col("doc_id"))
           .limit(20),
       Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
@@ -1933,7 +1930,7 @@ object TextAnalysis {
       "q_text_boilerplate",
       "boilerplate detector: the most-repeated verbatim 13-token spans corpus-wide (headers, templates, injected banners — the passages exact-substring dedup would strip doc-internally and q_dedup_spans pairs up doc-to-doc): top-20 grams by occurrence count with doc reach. The gram TEXT surfaces (not its hash) because the output is a review queue; one explode, one codegen'd HashAggregate with map-side combine — n_occ > 1 keeps the shuffle at duplicate grams only at any corpus size",
       (s, dir) =>
-        repeatedGrams(Tables.fanout(Tables.documents(s, dir)))
+        repeatedGrams(Tables.documents(s, dir))
           .orderBy(col("n_occ").desc, col("g"))
           .limit(20),
       Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),

@@ -91,14 +91,14 @@ object TextShared {
     * discipline.
     */
   private[graft] def seqFreq(s: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.get(s, dir, FreqArtifact)(seqFreqFrom(graft.Tables.fanout(graft.Tables.documents(s, dir))))
+    graft.Artifacts.get(s, dir, FreqArtifact)(seqFreqFrom(graft.Tables.documents(s, dir)))
 
   /** [[seqFreq]] over the even-doc_id TRAINING half (seq_freq_even) — the
     * shared input of the three `*_encode_heldout` trainers.
     */
   private[graft] def seqFreqEven(s: SparkSession, dir: String): DataFrame =
     graft.Artifacts.get(s, dir, FreqEvenArtifact)(
-      seqFreqFrom(graft.Tables.fanout(graft.Tables.documents(s, dir).filter(col("doc_id") % 2 === 0))))
+      seqFreqFrom(graft.Tables.documents(s, dir).filter(col("doc_id") % 2 === 0)))
 
   // ---- DuckDB side (SQL text) ----
 

@@ -606,7 +606,7 @@ object Unigram {
       (s, dir) =>
         Bpe.encodeReadout(
           Tables.documents(s, dir),
-          encodeViterbi(Tables.fanout(Tables.documents(s, dir)), trainedUnigram(s, dir))
+          encodeViterbi(Tables.documents(s, dir), trainedUnigram(s, dir))
         ),
       Some(encSql(Rounds, "TRUE", "TRUE"))
     ),
@@ -614,11 +614,8 @@ object Unigram {
       "q_unigram_encode_heldout",
       s"Unigram-LM APPLY on HELD-OUT data — train the $Rounds-round hard-EM vocab on the even-doc_id half of the corpus, then Viterbi-encode the ODD half with that frozen vocab (the q_bpe_encode_heldout gate shape for the third tokenizer family). The held-out half's own statistics never touch the model, and tokens NEVER SEEN in training score the documented UNK floor (${UnkUnits} fixed-point units — below any real piece until total piece count exceeds e^50/1e6) and pass through as themselves, the SentencePiece unk rule. Output per held-out doc: token counts before/after and the segmentation md5. First 500 docs by id",
       (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        Bpe.encodeReadout(
-          docs.filter(col("doc_id") % 2 === 1),
-          encodeViterbi(Tables.fanout(docs.filter(col("doc_id") % 2 === 1)), trainedUnigramEven(s, dir))
-        )
+        val heldOut = Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
+        Bpe.encodeReadout(heldOut, encodeViterbi(heldOut, trainedUnigramEven(s, dir)))
       },
       Some(encSql(Rounds, "doc_id % 2 = 0", "doc_id % 2 = 1"))
     ),

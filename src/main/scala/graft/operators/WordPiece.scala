@@ -398,7 +398,7 @@ object WordPiece {
       (s, dir) =>
         Bpe.encodeReadout(
           Tables.documents(s, dir),
-          encodeGreedy(Tables.fanout(Tables.documents(s, dir)), trainedWordPiece(s, dir))
+          encodeGreedy(Tables.documents(s, dir), trainedWordPiece(s, dir))
         ),
       Some {
         val ctes = trainCtesSql(Rounds, "TRUE") ++ encCtesSql(Rounds, "TRUE")
@@ -410,11 +410,8 @@ object WordPiece {
       "q_wordpiece_encode_heldout",
       s"WordPiece APPLY on HELD-OUT data — train the $Rounds-round likelihood-ratio merge table on the even-doc_id half of the corpus, then greedy-encode the ODD half with that frozen vocab (the q_bpe_encode_heldout gate shape for the second tokenizer family): the held-out half's own pair statistics never pick a merge — its likelihood argmax could differ from the trained table's, and the longest-match walk consumes ONLY the frozen vocab broadcast. Output per held-out doc: token counts before/after and the encode md5. First 500 docs by id",
       (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        Bpe.encodeReadout(
-          docs.filter(col("doc_id") % 2 === 1),
-          encodeGreedy(Tables.fanout(docs.filter(col("doc_id") % 2 === 1)), trainedWordPieceEven(s, dir))
-        )
+        val heldOut = Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
+        Bpe.encodeReadout(heldOut, encodeGreedy(heldOut, trainedWordPieceEven(s, dir)))
       },
       Some {
         val ctes = trainCtesSql(Rounds, "doc_id % 2 = 0") ++ encCtesSql(Rounds, "doc_id % 2 = 1")

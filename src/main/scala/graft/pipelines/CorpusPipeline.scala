@@ -1332,7 +1332,7 @@ object CorpusPipeline {
   private def ledgerArtifact(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     def build = funnelLedgerTracked(
       graft.Tables.documents(s, dir),
-      graft.Tables.fanout(graft.Tables.embeddings(s, dir)),
+      graft.Tables.embeddings(s, dir),
       graft.operators.IvfSimilarity.assignments(s, dir))
     graft.Artifacts.getTracked(s, dir, LedgerArtifact)(build)
   }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per key under concurrent first use, globally unique artifact names, and
   * the versioned build-once directories under /tmp.
   */
-class ArtifactsSpec extends AnyFunSuite {
+class ArtifactsSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -53,26 +53,19 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("buildOnceDir: built once per version, rebuilt on another version or a torn marker") {
-    val root   = java.nio.file.Files.createTempDirectory("graft-once").toFile
-    val dir    = s"$root/d"
+    val dir    = s"${tempDir("graft-once")}/d"
     var builds = 0
     def once(version: String) = Artifacts.buildOnceDir(dir, version) { d =>
       new java.io.File(d).mkdirs()
       builds += 1
     }
-    try {
-      once("v1")
-      once("v1")
-      assert(builds === 1)
-      once("v2")
-      assert(builds === 2, "a marker written by another version must rebuild")
-      new java.io.File(dir, "_SUCCESS").delete()
-      once("v2")
-      assert(builds === 3, "a directory without its marker must rebuild")
-    } finally {
-      new java.io.File(dir, "_SUCCESS").delete()
-      new java.io.File(dir).delete()
-      root.delete()
-    }
+    once("v1")
+    once("v1")
+    assert(builds === 1)
+    once("v2")
+    assert(builds === 2, "a marker written by another version must rebuild")
+    new java.io.File(dir, "_SUCCESS").delete()
+    once("v2")
+    assert(builds === 3, "a directory without its marker must rebuild")
   }
 }

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rebuilds rather than serving the old blocks — which is precisely what
   * lets one JVM compare both paths.
   */
-class DurableArtifactParitySpec extends AnyFunSuite {
+class DurableArtifactParitySpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -125,7 +125,7 @@ class DurableArtifactParitySpec extends AnyFunSuite {
     val baseline: Map[String, Seq[String]] = family.map { name =>
       name -> SparkEntry.queries(name)(spark, TestSpark.sfDir).collect().map(_.toString).toSeq
     }.toMap
-    val root = java.nio.file.Files.createTempDirectory("graft-parity-artifacts").toString
+    val root = tempDir("graft-parity-artifacts")
     System.setProperty("graft.artifact.root", root)
     try {
       family.foreach { name =>

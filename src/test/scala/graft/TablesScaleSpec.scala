@@ -3,23 +3,22 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The two mode-gated scale seams in [[Tables]]:
+/** The scale seams in [[Tables]]:
   *
-  *   - [[Tables.fanout]] must repartition starved fixture scans locally
-  *     ("force", the local default) but be a no-op on an already-parallel
-  *     input in "auto" mode — on a 100 TB corpus an unconditional
-  *     repartition would shuffle the whole corpus before every explode.
+  *   - [[Tables.fanout]] spreads a starved frame once: it is the identity
+  *     on a frame that is already a narrow view of a spread one (so the
+  *     corpus tables, which come spread, are never spread twice), and on a
+  *     cluster it leaves an already-parallel input alone — on a 100 TB
+  *     corpus an unconditional repartition would shuffle the whole corpus
+  *     before every explode.
   *   - [[Tables.pin]] must materialize once under every mode; "persist"
   *     keeps lineage (fault-tolerant on executor loss) where the local
   *     default truncates it.
   */
-class TablesScaleSpec extends AnyFunSuite {
+class TablesScaleSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
   private def dp = spark.sparkContext.defaultParallelism
-
-  private def withMode(key: String, value: String)(body: => Unit): Unit =
-    withModeValue(key, value)(body)
 
   private def withModeValue[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
@@ -31,27 +30,51 @@ class TablesScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("fanout force (local default): starved scan is spread to defaultParallelism") {
+  private def roundRobin(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.shuffleOrigin == org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM => e
+    }
+
+  private def repartitionNodes(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collect { case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r }.size
+
+  test("fanout: a starved frame is spread to defaultParallelism") {
     val one = spark.range(0, 1000, 1, numPartitions = 1).toDF("id")
     assert(Tables.fanout(one).rdd.getNumPartitions === dp)
   }
 
-  test("fanout auto: no-op when the input already has enough splits, spreads when starved") {
-    withMode("spark.graft.fanout.mode", "auto") {
-      val wide = spark.range(0, 1000, 1, numPartitions = dp + 4).toDF("id")
-      assert(Tables.fanout(wide).rdd.getNumPartitions === dp + 4,
-        "auto must not shuffle an already-parallel input")
-      val one = spark.range(0, 1000, 1, numPartitions = 1).toDF("id")
-      assert(Tables.fanout(one).rdd.getNumPartitions === dp,
-        "auto must still rescue a starved scan")
-    }
+  test("fanout is idempotent: fanout(fanout(x)) plans one REPARTITION_BY_NUM exchange") {
+    val once  = Tables.fanout(spark.range(0, 1000, 1, numPartitions = 1).toDF("id"))
+    val twice = Tables.fanout(once)
+    assert(twice eq once, "a spread frame must come back unchanged")
+    assert(repartitionNodes(twice) === 1)
+    assert(roundRobin(twice).size === 1, s"one exchange:\n${twice.queryExecution.sparkPlan}")
   }
 
-  test("fanout off: identity") {
-    withMode("spark.graft.fanout.mode", "off") {
-      val one = spark.range(0, 1000, 1, numPartitions = 1).toDF("id")
-      assert(Tables.fanout(one).rdd.getNumPartitions === 1)
-    }
+  test("fanout of a documents view: one round-robin exchange, selected columns only") {
+    val view = Tables
+      .documents(spark, TestSpark.sfDir)
+      .filter(col("doc_id") % 2 === 1)
+      .select(col("doc_id"), col("text"))
+    val spread = Tables.fanout(view)
+    assert(spread eq view, "a narrow view of the spread documents table is spread already")
+    val ex = roundRobin(spread)
+    assert(ex.size === 1, s"exactly one round-robin exchange:\n${spread.queryExecution.sparkPlan}")
+    assert(ex.head.child.output.map(_.name) === Seq("doc_id", "text"),
+      s"column pruning must reach below the table's exchange:\n${spread.queryExecution.sparkPlan}")
+    assert(spread.count() === Tables.documents(spark, TestSpark.sfDir).filter(col("doc_id") % 2 === 1).count())
+  }
+
+  test("fanout decision: parallelism 1 no-op, local spread, cluster starvation check") {
+    def unread: Int = fail("a local master must not read the input's partition count")
+    assert(!Tables.spreads(1, isLocal = true, 1), "repartition(1) is an exchange for nothing")
+    assert(!Tables.spreads(1, isLocal = false, 0))
+    assert(Tables.spreads(4, isLocal = true, unread))
+    assert(Tables.spreads(4, isLocal = false, 1), "a starved cluster scan is spread")
+    assert(Tables.spreads(4, isLocal = false, 3))
+    assert(!Tables.spreads(4, isLocal = false, 4), "an already-parallel cluster input is left alone")
+    assert(!Tables.spreads(4, isLocal = false, 1000))
   }
 
   test("pinKeyed: the pinned frame advertises its hash partitioning and a keyed groupBy plans NO exchange") {
@@ -77,12 +100,6 @@ class TablesScaleSpec extends AnyFunSuite {
     val got    = bySubset.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expect, "keyed pin must not change any value")
     Tables.unpin(pinned)
-    // mode off: plain pin, no repartition added
-    withMode("spark.graft.fanout.mode", "off") {
-      val plain = Tables.pinKeyed(df, col("k"))
-      assert(plain.rdd.getNumPartitions === 3, "off must skip the keyed respread")
-      Tables.unpin(plain)
-    }
   }
 
   test("pinKeyed: concurrent builds restore AQE and each pin stays exchange-free") {
@@ -117,7 +134,7 @@ class TablesScaleSpec extends AnyFunSuite {
   }
 
   test("pin persist mode: same rows, DISK_ONLY storage, lineage retained, unpin releases") {
-    withMode("spark.graft.pin.mode", "persist") {
+    withModeValue("spark.graft.pin.mode", "persist") {
       val df = spark.range(0, 100).toDF("id").withColumn("v", col("id") * 2)
       val pinned = Tables.pin(df)
       assert(pinned.storageLevel === org.apache.spark.storage.StorageLevel.DISK_ONLY)
@@ -138,7 +155,7 @@ class TablesScaleSpec extends AnyFunSuite {
     // OOM in the analyzer within ~8 rounds). pinIter must therefore
     // truncate every round — reliable checkpoint() under cluster modes.
     spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt-cc").toString)
+      tempDir("graft-ckpt-cc"))
     // a 30-node chain (worst-case diameter) plus a disjoint triangle
     val pairs = ((0L until 29L).map(i => (i, i + 1)) ++ Seq((100L, 101L), (101L, 102L)))
       .toDF("doc_a", "doc_b")
@@ -171,7 +188,7 @@ class TablesScaleSpec extends AnyFunSuite {
   test("pinIter reliable path: unpin reclaims the checkpoint files, not just the blocks") {
     import spark.implicits._
     spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt-reclaim").toString)
+      tempDir("graft-ckpt-reclaim"))
     withModeValue("spark.graft.pin.mode", "persist") {
       val pinned = Tables.pinIter(Seq(1L, 2L, 3L).toDF("id"))
       val ckptFile = pinned.queryExecution.analyzed

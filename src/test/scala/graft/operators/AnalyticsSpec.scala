@@ -3,14 +3,13 @@ package graft.operators
 import graft.TestSpark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics tests for the product-analytics operators on constructed
   * corpora where the expected funnel / retention values are hand-checkable
   * (the DuckDB oracle checks the fixture corpus; this checks the logic).
   */
-class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnalyticsSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   // the SHARED test session — never stop it (localSession getOrCreate
   // returns the one active session; stopping it here killed every suite
@@ -36,7 +35,7 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     )
     val sp = spark
     import sp.implicits._
-    dir = java.nio.file.Files.createTempDirectory("analytics-spec").toString
+    dir = tempDir("analytics-spec")
     rows
       .toDF("event_id", "tsn", "user_id", "event_type", "value", "props")
       // long nanos, as Tables.events expects (the fixture stores parquet
@@ -48,8 +47,6 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .mode("overwrite")
       .parquet(s"$dir/events.parquet")
   }
-
-  override def afterAll(): Unit = ()
 
   test("funnel counts users per stage with ordering constraints") {
     val r = Analytics.defs.find(_.name == "q_funnel").get.build(spark, dir).collect()(0)
@@ -91,7 +88,7 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import sp.implicits._
     // own dir: Tables.documents memoizes the resolved relation per dir, and
     // the bigram test parks a 2-column documents.parquet under the shared one
-    val ngDir = java.nio.file.Files.createTempDirectory("analytics-ngrams").toString
+    val ngDir = tempDir("analytics-ngrams")
     Seq(
       (1L, "a a a a", "en", "rep"),
       (2L, "a b c", "en", "div")

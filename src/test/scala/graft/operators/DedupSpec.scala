@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixture corpus has none, so the oracle-checked queries only prove parity;
   * these constructed corpora prove function.
   */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -139,7 +139,7 @@ class DedupSpec extends AnyFunSuite {
       .collect()
       .map(_.toString)
       .toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-artifacts").toString
+    val root = tempDir("graft-artifacts")
     System.setProperty("graft.artifact.root", root)
     try {
       val durable = graft.SparkEntry
@@ -175,7 +175,7 @@ class DedupSpec extends AnyFunSuite {
     // overwrite writes into one _SUCCESS-marked dir (the exists-then-write
     // window); with the per-path lock exactly one builds, the rest read the
     // committed result.
-    val dir         = java.nio.file.Files.createTempDirectory("graft-durable-race").toString + "/artifact"
+    val dir         = tempDir("graft-durable-race") + "/artifact"
     val buildCount  = new java.util.concurrent.atomic.AtomicInteger(0)
     val inFlight    = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)

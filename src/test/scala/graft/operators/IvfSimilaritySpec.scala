@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * candidates, so the top-5 similarities at every rank dominate (>=) the
   * single-probe top-5.
   */
-class IvfSimilaritySpec extends AnyFunSuite {
+class IvfSimilaritySpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -111,7 +111,7 @@ class IvfSimilaritySpec extends AnyFunSuite {
       .collect()
       .map(_.toString)
       .toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-artifacts").toString
+    val root = tempDir("graft-artifacts")
     System.setProperty("graft.artifact.root", root)
     try {
       // the root is part of the cache key, so this build goes durable:
@@ -141,7 +141,7 @@ class IvfSimilaritySpec extends AnyFunSuite {
       .collect()
       .map(_.toString)
       .toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-torn").toString
+    val root = tempDir("graft-torn")
     // simulate a job killed mid-write: artifact dir exists with stray data
     // but no _SUCCESS commit marker
     val idx = new java.io.File(graft.Artifacts.durablePath(root, TestSpark.sfDir, "ivf_assignments"))

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the fixture corpus, and planted cases pin the Laplace default for
   * unseen tokens and the deterministic tie rule.
   */
-class NaiveBayesSpec extends AnyFunSuite {
+class NaiveBayesSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -166,7 +166,7 @@ class NaiveBayesSpec extends AnyFunSuite {
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val conf = NaiveBayes.defs.find(_.name == "q_nb_confusion").get
     // drive the op body directly over the planted frame via a temp dir
-    val dir = java.nio.file.Files.createTempDirectory("nb-planted").toString
+    val dir = tempDir("nb-planted")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = conf
       .build(spark, dir)
@@ -204,7 +204,7 @@ class NaiveBayesSpec extends AnyFunSuite {
     }
     val (binWrong, binCorrect) = (refBin(wrong), refBin(correct))
     assert(binWrong > binCorrect, s"the planted margins must separate bins: $binWrong vs $binCorrect")
-    val dir = java.nio.file.Files.createTempDirectory("nb-cal-planted").toString
+    val dir = tempDir("nb-cal-planted")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = NaiveBayes.defs.find(_.name == "q_nb_calibration").get
       .build(spark, dir)
@@ -221,7 +221,7 @@ class NaiveBayesSpec extends AnyFunSuite {
       (0L, "aa aa", "a", "src", 8L),
       (1L, "aa", "a", "src", 8L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("nb-cal-single").toString
+    val dir = tempDir("nb-cal-single")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = NaiveBayes.defs.find(_.name == "q_nb_calibration").get
       .build(spark, dir)

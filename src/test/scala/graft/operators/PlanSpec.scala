@@ -412,7 +412,7 @@ class PlanSpec extends AnyFunSuite {
     // the static threshold also pins AQE's runtime conversion, whose own
     // threshold defaults to it.)
     import org.apache.spark.sql.functions.col
-    val emb     = graft.Tables.fanout(graft.Tables.embeddings(spark, TestSpark.sfDir))
+    val emb     = graft.Tables.embeddings(spark, TestSpark.sfDir)
     val queries = emb.filter(col("vec_id") < 3).select(col("vec_id"), col("embedding"))
     val corpus  = emb.filter(col("vec_id") >= 3).select(col("vec_id"), col("embedding"))
     val prev    = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tile, exactly one current version per key) and the linear-interpolation
   * gap-fill (exact-integer convex-combination lerp on interior gaps).
   */
-class Scd2InterpSpec extends AnyFunSuite {
+class Scd2InterpSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
 
@@ -90,7 +90,7 @@ class Scd2InterpSpec extends AnyFunSuite {
 
   test("funnel: a step event BEFORE the previous step's conversion does not count") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("funnel-events").toString
+    val dir = tempDir("funnel-events")
     def ev(uid: Long, id: Long, tpe: String, sec: Long) =
       (id, uid, tpe, ts(sec), 1.0)
     // A completes all four in order; B's only purchase PRECEDES the

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * exact dedup -> near-dup dedup -> split assign -> partitioned write,
   * with row-conservation accounting and deterministic re-runs.
   */
-class CorpusPipelineSpec extends AnyFunSuite {
+class CorpusPipelineSpec extends AnyFunSuite with TestSpark.TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -33,7 +33,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("pipeline conserves rows, drops each planted defect, lays out splits") {
-    val out = Files.createTempDirectory("pipeline").toString + "/corpus"
+    val out = tempDir("pipeline") + "/corpus"
     val stats = CorpusPipeline.run(corpus, out)
 
     assert(stats.nIn === stats.nDroppedQuality + stats.nDroppedExact + stats.nDroppedNearDup + stats.nOut,
@@ -54,11 +54,11 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("funnel census == the writing pipeline's own stage accounting on the same planted corpus") {
-    val out = Files.createTempDirectory("pipeline-funnel").toString + "/corpus"
+    val out = tempDir("pipeline-funnel") + "/corpus"
     // the funnel includes the semantic stage, so the writing run enables
     // it with the SAME embedding frame and threshold; planted docs
     // (900001+) have no embeddings and pass the stage untouched
-    val emb = Tables.fanout(Tables.embeddings(spark, TestSpark.sfDir))
+    val emb = Tables.embeddings(spark, TestSpark.sfDir)
     val stats =
       CorpusPipeline.run(corpus, out, semanticEmb = Some(emb), semanticThreshold = 0.4)
     val (a2, a2Pins) = graft.operators.IvfSimilarity.assignFrom(emb)
@@ -109,7 +109,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(q(9L) > q(8L), s"planted quality order must hold: $q")
 
     def survivors(keepBest: Boolean): (CorpusPipeline.Stats, Set[Long]) = {
-      val out = Files.createTempDirectory("pipeline-sem-keep").toString + "/corpus"
+      val out = tempDir("pipeline-sem-keep") + "/corpus"
       val stats = CorpusPipeline.run(docs, out, minQuality = 0.0,
         semanticEmb = Some(emb), semanticThreshold = 0.9, keepBestQuality = keepBest)
       (stats, spark.read.parquet(out).select("doc_id").collect().map(_.getLong(0)).toSet)
@@ -123,7 +123,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("gopher-rule stage: drops counted in the funnel, survivors satisfy every rule, off by default") {
-    val out = Files.createTempDirectory("pipeline-gopher").toString + "/corpus"
+    val out = tempDir("pipeline-gopher") + "/corpus"
     val stats = CorpusPipeline.run(corpus, out, gopherRules = true)
 
     assert(stats.nIn === stats.nDroppedQuality + stats.nDroppedRules + stats.nDroppedExact +
@@ -143,12 +143,12 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(minTok >= 50, s"every survivor passes the length rule, min was $minTok")
 
     // default path unchanged: no rules stage, field stays 0
-    val plain = CorpusPipeline.run(corpus, Files.createTempDirectory("pipeline-plain").toString + "/corpus")
+    val plain = CorpusPipeline.run(corpus, tempDir("pipeline-plain") + "/corpus")
     assert(plain.nDroppedRules === 0L)
   }
 
   test("segment-rewrite stage: shared banner cut from survivors, funnel extended, off by default") {
-    val out = Files.createTempDirectory("pipeline-seg").toString + "/corpus"
+    val out = tempDir("pipeline-seg") + "/corpus"
     // 8-token banner shared by two otherwise-unique long docs: doc-level
     // dedup keeps both (low Jaccard), the segment stage must strip the
     // banner from the LATER doc only. Tails are 50+ tokens so the quality
@@ -180,12 +180,12 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(texts(910002L).contains("beta1"), "unique content survives the rewrite")
 
     // default path unchanged: no rewrite, fields stay 0
-    val plain = CorpusPipeline.run(corpus, Files.createTempDirectory("pipeline-noseg").toString + "/corpus")
+    val plain = CorpusPipeline.run(corpus, tempDir("pipeline-noseg") + "/corpus")
     assert(plain.nDroppedSegEmpty === 0L && plain.nSegmentsDropped === 0L)
   }
 
   test("exact-substring stage: a copy straddling segment boundaries is cut; funnel extended, off by default") {
-    val out = Files.createTempDirectory("pipeline-substr").toString + "/corpus"
+    val out = tempDir("pipeline-substr") + "/corpus"
     // doc B embeds a 13-token run copied from doc A at an UNALIGNED
     // offset: the run crosses every 8-token segment boundary, so the
     // segment stage (also on) misses it — only the sliding-window pass
@@ -218,12 +218,12 @@ class CorpusPipelineSpec extends AnyFunSuite {
       "unique content survives the rewrite")
 
     // default path unchanged: stage off, fields stay 0
-    val plain = CorpusPipeline.run(corpus, Files.createTempDirectory("pipeline-nosub").toString + "/corpus")
+    val plain = CorpusPipeline.run(corpus, tempDir("pipeline-nosub") + "/corpus")
     assert(plain.nDroppedSubstrEmpty === 0L && plain.nDupTokensCut === 0L)
   }
 
   test("winnowContainment stage: a MOSTLY-quoted doc drops whole, a lightly-quoting doc survives") {
-    val out = Files.createTempDirectory("pipeline-contain").toString + "/corpus"
+    val out = tempDir("pipeline-contain") + "/corpus"
     // A carries two distinct 20-token runs. B is essentially run1 with
     // thin padding (overlap vs the smaller fingerprint set ~0.8): drops
     // whole. D quotes run2 amid 50 unique tokens (overlap ~0.3): the
@@ -255,7 +255,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
     // without the stage all three survive (LSH alone misses the quotes)
     val plain = CorpusPipeline.run(
-      corpus.union(planted), Files.createTempDirectory("pipeline-nocontain").toString + "/corpus")
+      corpus.union(planted), tempDir("pipeline-nocontain") + "/corpus")
     assert(plain.nDroppedContainment === 0L)
     assert(plain.nOut === stats.nOut + stats.nDroppedContainment,
       "the containment drops are exactly the docs the default path keeps")
@@ -274,8 +274,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val b = (990002L, stem + " quietly", "en", "kb")
     val corpus2 = corpus.union(Seq(a, b).toDF("doc_id", "text", "lang", "source"))
 
-    val outMin  = Files.createTempDirectory("pipeline-kb-min").toString + "/corpus"
-    val outBest = Files.createTempDirectory("pipeline-kb-best").toString + "/corpus"
+    val outMin  = tempDir("pipeline-kb-min") + "/corpus"
+    val outBest = tempDir("pipeline-kb-best") + "/corpus"
     val sMin  = CorpusPipeline.run(corpus2, outMin)
     val sBest = CorpusPipeline.run(corpus2, outBest, keepBestQuality = true)
     assert(sMin.nDroppedNearDup === sBest.nDroppedNearDup,
@@ -288,7 +288,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("segment-rewrite stage survives upstream stages dropping every doc (zeros, not NPE)") {
-    val out = Files.createTempDirectory("pipeline-seg-empty").toString + "/corpus"
+    val out = tempDir("pipeline-seg-empty") + "/corpus"
     // every doc fails the quality gate, so the segment stage sees an
     // empty frame: sum() over it is null and must coalesce to 0 stats
     val junk = Seq(
@@ -304,7 +304,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("compaction: identical content pre/post, file count sized by bytes/target per split") {
-    val baseDir = Files.createTempDirectory("pipeline").toString
+    val baseDir = tempDir("pipeline")
     val target  = 32L * 1024
     // 5 files per split fragments the output so compaction has work to do
     val plain     = CorpusPipeline.run(corpus, s"$baseDir/plain", filesPerSplit = 5)
@@ -336,7 +336,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // the shape a real corpus job takes: JSONL delivery -> ingest with
     // explicit schema (malformed lines dropped, counted) -> the full
     // filter/dedup/split pipeline -> hive-layout parquet
-    val baseDir = Files.createTempDirectory("pipeline-jsonl").toString
+    val baseDir = tempDir("pipeline-jsonl")
     graft.sources.JsonlCorpus.write(corpus, s"$baseDir/arrival", nFiles = 2)
     val ingested = graft.sources.JsonlCorpus
       .read(spark, s"$baseDir/arrival")
@@ -351,7 +351,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("torn swap: the between-renames crash state keeps a full copy, and recovery heals it") {
-    val baseDir = Files.createTempDirectory("pipeline-torn").toString
+    val baseDir = tempDir("pipeline-torn")
     val out     = s"$baseDir/corpus"
     CorpusPipeline.run(corpus, out, filesPerSplit = 5)
 
@@ -394,7 +394,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       live: org.apache.hadoop.fs.Path,
       docId: Long
   ): String = {
-    val tmpDir = Files.createTempDirectory("newcomer").toString + "/one"
+    val tmpDir = tempDir("newcomer") + "/one"
     Seq((docId, s"late arrival $docId", "en", "stream"))
       .toDF("doc_id", "text", "lang", "source")
       .coalesce(1)
@@ -415,7 +415,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // anything a concurrent writer (e.g. a streaming sink) appended after
     // Sinks.compact's snapshot read was silently destroyed. The manifest
     // protocol must carry it forward.
-    val baseDir = Files.createTempDirectory("pipeline-concurrent").toString
+    val baseDir = tempDir("pipeline-concurrent")
     val out     = s"$baseDir/corpus"
     CorpusPipeline.run(corpus, out, filesPerSplit = 5)
 
@@ -449,7 +449,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // what lets recovery tell them apart (snapshot -> drop, newcomer ->
     // merge back). The manifest file format (newline-separated names at
     // .compact-manifest-<name>) is the on-disk contract this spec builds.
-    val baseDir = Files.createTempDirectory("pipeline-crash2").toString
+    val baseDir = tempDir("pipeline-crash2")
     val out     = s"$baseDir/corpus"
     CorpusPipeline.run(corpus, out, filesPerSplit = 5)
 
@@ -486,7 +486,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // a streaming file sink's readers resolve files THROUGH _spark_metadata;
     // compacting around it would orphan every logged path. run() must
     // refuse; retireStreamLog (no active stream) unblocks it.
-    val baseDir = Files.createTempDirectory("pipeline-meta").toString
+    val baseDir = tempDir("pipeline-meta")
     val out     = s"$baseDir/corpus"
     CorpusPipeline.run(corpus, out, filesPerSplit = 5)
 
@@ -512,7 +512,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: landing zone -> quality/dedup-on-arrival -> split parquet, drops observable") {
-    val dir  = Files.createTempDirectory("pipeline-stream").toString
+    val dir  = tempDir("pipeline-stream")
     val land = s"$dir/landing"
     assert(new java.io.File(land).mkdirs())
     def landFile(name: String, lines: String*): Unit =
@@ -551,7 +551,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
   test("streaming ingest with decontamination: eval-overlapping docs dropped at ingest, counted") {
     import spark.implicits._
-    val dir  = Files.createTempDirectory("pipeline-decon").toString
+    val dir  = tempDir("pipeline-decon")
     val land = s"$dir/landing"
     assert(new java.io.File(land).mkdirs())
     def landFile(name: String, lines: String*): Unit =
@@ -583,7 +583,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("streaming NEAR-dup on arrival: durable band index drops cross-batch near-dups, CC drops within-batch ones") {
-    val dir  = Files.createTempDirectory("pipeline-neardup").toString
+    val dir  = tempDir("pipeline-neardup")
     val land = s"$dir/landing"
     assert(new java.io.File(land).mkdirs())
     def landFile(name: String, lines: String*): Unit =
@@ -621,7 +621,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("streaming winnow containment: quoting a prior survivor drops on arrival; within-batch quotes drop the larger id") {
-    val dir  = Files.createTempDirectory("pipeline-winnow").toString
+    val dir  = tempDir("pipeline-winnow")
     val land = s"$dir/landing"
     assert(new java.io.File(land).mkdirs())
     def landFile(name: String, lines: String*): Unit =
@@ -684,7 +684,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("winnow fingerprint index folds through the shared relayout; the pruned base still catches quotes") {
-    val dir  = Files.createTempDirectory("pipeline-winnow-relayout").toString
+    val dir  = tempDir("pipeline-winnow-relayout")
     val land = s"$dir/landing"
     assert(new java.io.File(land).mkdirs())
     def landFile(name: String, lines: String*): Unit =
@@ -719,7 +719,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("viral fingerprint: index posting lists are capped at ingest and re-trimmed by the relayout fold, with visible metrics") {
-    val dir  = Files.createTempDirectory("pipeline-winnow-viral").toString
+    val dir  = tempDir("pipeline-winnow-viral")
     val land = s"$dir/landing"
     assert(new java.io.File(land).mkdirs())
     def landFile(name: String, lines: String*): Unit =
@@ -794,7 +794,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("streaming near-dup survives stop/restart: checkpoint resumes, index state carries across generations") {
-    val dir  = Files.createTempDirectory("pipeline-neardup-restart").toString
+    val dir  = tempDir("pipeline-neardup-restart")
     val land = s"$dir/landing"
     assert(new java.io.File(land).mkdirs())
     def landFile(name: String, lines: String*): Unit =
@@ -824,7 +824,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("near-dup index relayout folds the tail into a band-prefix base; the probe partition-prunes and still catches collisions") {
-    val dir  = Files.createTempDirectory("pipeline-neardup-relayout").toString
+    val dir  = tempDir("pipeline-neardup-relayout")
     val land = s"$dir/landing"
     assert(new java.io.File(land).mkdirs())
     def landFile(name: String, lines: String*): Unit =
@@ -942,7 +942,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
       (ids, idx)
     }
-    val root = Files.createTempDirectory("pipeline-neardup-kill").toString
+    val root = tempDir("pipeline-neardup-kill")
     val (idsA, idxA) = runScenario(s"$root/interrupted", interrupted = true)
     val (idsB, idxB) = runScenario(s"$root/clean", interrupted = false)
     assert(idsA === idsB, s"survivors must match the uninterrupted run: $idsA vs $idsB")
@@ -951,7 +951,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("re-running the pipeline reproduces identical stats and splits") {
-    val baseDir = Files.createTempDirectory("pipeline").toString
+    val baseDir = tempDir("pipeline")
     val s1 = CorpusPipeline.run(corpus, s"$baseDir/a")
     val s2 = CorpusPipeline.run(corpus, s"$baseDir/b")
     assert(s1 === s2)
@@ -962,7 +962,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("terminal packing stage: fixed-length token-id rows per split, hidden from corpus readers") {
-    val out   = Files.createTempDirectory("pipeline-pack").toString + "/corpus"
+    val out   = tempDir("pipeline-pack") + "/corpus"
     val stats = CorpusPipeline.run(corpus, out, packSeqLen = Some(64))
     assert(stats.nPackedSequences > 0, s"packing must emit sequences: $stats")
     // a plain corpus reader of outPath must NOT see the packed product
@@ -993,7 +993,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("drop ledger: one row per dropped doc, first stage wins, census is its exact readout") {
-    val emb      = Tables.fanout(Tables.embeddings(spark, TestSpark.sfDir))
+    val emb      = Tables.embeddings(spark, TestSpark.sfDir)
     val (a2, a2Pins) = graft.operators.IvfSimilarity.assignFrom(emb)
     val (ledgerF, pins) = CorpusPipeline.funnelLedgerTracked(corpus, emb, a2)
     val ledger = ledgerF.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))

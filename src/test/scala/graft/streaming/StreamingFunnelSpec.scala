@@ -18,7 +18,7 @@ class StreamingFunnelSpec extends AnyFunSuite with TestSpark.TempDirs {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  private lazy val emb = Tables.pin(Tables.fanout(Tables.embeddings(spark, TestSpark.sfDir)))
+  private lazy val emb = Tables.pin(Tables.embeddings(spark, TestSpark.sfDir))
   private lazy val a2  = {
     val (f, _) = graft.operators.IvfSimilarity.assignFrom(emb)
     Tables.pin(f)
