@@ -60,15 +60,18 @@ object Tables {
 
   /** Build a local session with graft confs. `cpus` also sizes
     * `spark.sql.shuffle.partitions` — on a real cluster this would instead
-    * be ~2-3x total executor cores (or left to AQE's initial value).
+    * be ~2-3x total executor cores (or left to AQE's initial value). The
+    * warehouse directory is named after the process and deleted when the
+    * JVM exits: nothing can find it again after that.
     */
   def localSession(appName: String, cpus: String = "4"): SparkSession = {
+    warehouseCleanup
     val b = SparkSession
       .builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", s"/tmp/graft-warehouse-${ProcessHandle.current().pid()}")
+      .config("spark.sql.warehouse.dir", warehouse.getPath)
       .config("spark.ui.enabled", "false")
       // catalog-level native functions (kmv_*, bloom_*, redact_pii, ...):
       // the same injection a cluster deployment gets from
@@ -80,6 +83,9 @@ object Tables {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  private val warehouse = new java.io.File(s"/tmp/graft-warehouse-${ProcessHandle.current().pid()}")
+  private lazy val warehouseCleanup = sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
 
   /** GRAFT_NO_ARTIFACT_CACHE=1: the [[Artifacts]] registry's no-cache mode. */
   lazy val noArtifactCache: Boolean =

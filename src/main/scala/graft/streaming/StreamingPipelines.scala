@@ -375,8 +375,9 @@ object StreamingPipelines {
 
   /** Streaming distribution-drift monitor: one PSI row per micro-batch
     * against the fixed reference, appended as a replay-safe per-batch dir
-    * (same idempotency pattern as [[idempotentParquetSink]] — a replayed
-    * batch overwrites its own dir, never duplicates). The per-batch work
+    * (a replayed batch overwrites its own dir, never duplicates). Unlike
+    * [[idempotentParquetSink]] it stays a `foreachBatch`: [[batchPsi]]
+    * pins and collects, which only a batch body can do. The per-batch work
     * is one tiny aggregation (<= B groups); the alerting query downstream
     * is a plain read of `outPath` filtered on `psi > threshold` (0.2 is
     * the conventional actionable-drift line).
@@ -520,11 +521,18 @@ object StreamingPipelines {
       }
   }
 
-  /** Idempotent micro-batch sink via foreachBatch: each batch lands in its
-    * own `batch_id=N` directory with overwrite, so a batch replayed after a
-    * failure rewrites the same directory instead of duplicating rows —
-    * exactly-once output on top of the checkpoint's at-least-once replay.
-    * (The pattern a real deployment uses for non-transactional targets.)
+  /** Idempotent micro-batch sink: micro-batch N lands in its own
+    * `outDir/batch_id=N` directory through the DSv2 streaming sink
+    * [[graft.sources.ParquetEpochSink]]. The sink's tasks write into a
+    * hidden per-epoch staging directory, and the epoch's commit replaces
+    * `batch_id=N` with it by rename; an aborted epoch deletes it. A batch
+    * replayed after a failure therefore rewrites its own directory instead
+    * of duplicating rows: exactly-once output on top of the checkpoint's
+    * at-least-once replay. The write is part of the micro-batch's own plan,
+    * not a second `DataFrameWriter` job per batch, and no Hadoop
+    * `Configuration` is serialized to its tasks: they get only the handful
+    * of entries `ParquetFileFormat.prepareWrite` sets (see the sink).
+    * `spark.read.parquet(outDir)` discovers `batch_id`.
     */
   def idempotentParquetSink(
       df: DataFrame,
@@ -532,9 +540,8 @@ object StreamingPipelines {
       checkpoint: String
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
+      .format(classOf[graft.sources.ParquetEpochSink].getName)
+      .option("path", outDir)
       .option("checkpointLocation", checkpoint)
 
   /** Streaming funnel — the incremental twin of the batch `q_funnel`
